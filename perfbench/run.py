@@ -1,14 +1,16 @@
 """Benchmark runner: one workload, one seed, one closed-loop run.
 
-    python3 perfbench/run.py --workload frontier_round --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload site_crawl --seed 1 --seconds 4 --trace 0
 
 Runs from the root of a checkout.  It starts one local Spark session sized
 to this machine, sets the workload up three times (reporting the median),
 warms it, then runs its unit of work back to back from a single thread
 until ``--seconds`` have passed, and checks the outputs.  With
-``--trace 1`` it then repeats the work under the tracer and reads the
-session's event log for the per-layer numbers; spans are written to
-``.perfbench_work/traces/``.
+``--trace 1`` it sets up once and does the work under the tracer instead,
+then traces the workload's companions (``COMPANIONS``) in the same
+session, and reads the session's event log for the per-layer numbers;
+spans are written to ``.perfbench_work/traces/``.  ``frontier_round`` runs
+on its own as well, but is not a workload of BENCHMARK.json.
 
 Stdout ends with one JSON line: ``correct``, ``attempted``, ``failed`` and
 ``metrics`` (the ``end_to_end`` metrics of BENCHMARK.json, or with
@@ -32,6 +34,9 @@ import time
 import traceback
 from types import SimpleNamespace
 
+T_PROCESS = time.monotonic()
+CLK_TCK = os.sysconf("SC_CLK_TCK")
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, ROOT)
@@ -42,6 +47,11 @@ from tracing import Tracer  # noqa: E402
 from workloads import WORKLOADS  # noqa: E402
 
 SETUP_REPS = 3
+# Workloads whose layers a host workload's traced run traces as well.  The
+# frontier round is not a workload of BENCHMARK.json, which keeps the many
+# repeated runs of a full benchmark session within their time budget, so
+# the catalog's traced run carries its leg ladder and operator layers.
+COMPANIONS = {"catalog_corpus": ("frontier_round",)}
 # stop starting new units this long after process start, so a slow machine
 # still ends well inside the runner's time limit
 HARD_STOP_S = 110.0
@@ -77,14 +87,15 @@ def _pss_kb(pid: int) -> int:
     return 0
 
 
-class TreeMemory:
+class ProcessTree:
     """Samples the summed memory of every process this one started (the
-    driver JVM and its Python workers) and remembers those processes.
+    driver JVM and its Python workers), remembers those processes, and
+    reads the CPU time of the whole tree.
 
     Memory is PSS (proportional set size): pages shared between processes,
     such as those of forked Python workers, count once in the sum."""
 
-    def __init__(self, interval: float = 0.2):
+    def __init__(self, interval: float = 0.5):
         self.interval = interval
         self.samples_kb: list[int] = []
         self.peak_kb = 0
@@ -134,6 +145,25 @@ class TreeMemory:
                     self.peak_by_name_kb[tree[pid]] = self.peak_by_name_kb.get(tree[pid], 0) + kb
             self._stop.wait(self.interval)
 
+    def cpu_s(self) -> float:
+        """CPU seconds used so far by this process and every process it
+        started, ended ones included (a process that ends adds its time to
+        the one that waits for it), less this sampler's own thread.
+
+        On a shared host, time the hypervisor or other tenants take from
+        the benchmark stretches wall time but not CPU time."""
+        total = sum(os.times()[:4])
+        for pid in self._tree():
+            try:
+                with open(f"/proc/{pid}/stat") as fh:
+                    stat = fh.read()
+            except OSError:  # ended since the listing
+                continue
+            total += sum(int(x) for x in stat[stat.rindex(")") + 2:].split()[11:15]) / CLK_TCK
+        if self._thread.is_alive():
+            total -= time.clock_gettime(time.pthread_getcpuclockid(self._thread.ident))
+        return total
+
     def p90_mb(self) -> float:
         """The 90th percentile of the samples: near the peak, but not set
         by the moment a short-lived worker happened to be alive."""
@@ -153,16 +183,24 @@ class TreeMemory:
         self._thread.join()
 
 
+def sql_settings(workload: str, cpus: int) -> dict:
+    """The SQL settings that differ by workload; they can change within a
+    session, so a companion workload sets its own."""
+    return {
+        # the frontier round keeps bench.py's 2x-cores shuffle width; the
+        # commit round and the catalog use 1x (bench.py's commit-round note)
+        "spark.sql.shuffle.partitions": str(2 * cpus if workload == "frontier_round" else cpus),
+        "spark.sql.adaptive.enabled": "false" if workload == "frontier_round" else "true",
+    }
+
+
 def session_settings(workload: str, cpus: int, work: str, event_dir: str | None) -> dict:
     settings = {
         "spark.master": f"local[{cpus}]",
         "spark.driver.memory": "2g",
         "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={work}/tmp -XX:-UsePerfData",
         "spark.default.parallelism": str(cpus),
-        # the frontier round keeps bench.py's 2x-cores shuffle width; the
-        # commit round and the catalog use 1x (bench.py's commit-round note)
-        "spark.sql.shuffle.partitions": str(2 * cpus if workload == "frontier_round" else cpus),
-        "spark.sql.adaptive.enabled": "false" if workload == "frontier_round" else "true",
+        **sql_settings(workload, cpus),
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4m",
         "spark.sql.session.timeZone": "UTC",
@@ -183,7 +221,30 @@ def session_settings(workload: str, cpus: int, work: str, event_dir: str | None)
     return settings
 
 
-def stop_spark(spark, mem: TreeMemory) -> None:
+def run_companion(name: str, ctx, host_sql: dict):
+    """Set up, warm and trace the workload ``name`` in the host's session,
+    under its own SQL settings, then put the host's back."""
+    wl = WORKLOADS[name](ctx)
+    for k, v in sql_settings(name, ctx.cpus).items():
+        ctx.spark.conf.set(k, v)
+    try:
+        wl.setup(0)
+        with ctx.tracer.paused():
+            wl.warm()
+        try:
+            wl.traced()
+        except Exception as exc:  # counted like a failed unit of the host
+            traceback.print_exc()
+            wl.attempted += 1
+            wl.fail(f"{name}: {type(exc).__name__}: {exc}")
+        wl.check()
+    finally:
+        for k, v in host_sql.items():
+            ctx.spark.conf.set(k, v)
+    return wl
+
+
+def stop_spark(spark, mem: ProcessTree) -> None:
     """Stop the session, shut the JVM down, and wait for every process it
     started (Python workers included) to end."""
     from pyspark import SparkContext
@@ -238,7 +299,8 @@ def main() -> int:
     )
 
     settings = session_settings(args.workload, cpus, work, event_dir)
-    mem = TreeMemory()
+    phases = {"start": time.monotonic() - T_PROCESS}
+    mem = ProcessTree()
     mem.start()
     steal_run0 = steal_ticks()
     spark = None
@@ -256,19 +318,25 @@ def main() -> int:
 
             tracer = Tracer(enabled=bool(args.trace))
             ctx = SimpleNamespace(spark=spark, tracer=tracer, seed=args.seed, scale=args.scale,
-                                  work=work, cpus=cpus, event_dir=event_dir)
+                                  work=work, cpus=cpus, event_dir=event_dir, cpu_s=mem.cpu_s)
             wl = WORKLOADS[args.workload](ctx)
 
             # the traced run reports no set-up time, so it sets up once
-            setup_times = []
+            t_setup = time.monotonic()
+            setup_times, setup_cpu = [], []
             for rep in range(1 if args.trace else SETUP_REPS):
-                t0 = time.monotonic()
+                t0, cpu0 = time.monotonic(), mem.cpu_s()
                 wl.setup(rep)
                 setup_times.append(time.monotonic() - t0)
+                setup_cpu.append(mem.cpu_s() - cpu0)
+            t_warm = time.monotonic()
             with tracer.paused():
                 wl.warm()
+            phases["setup"] = t_warm - t_setup
+            phases["warm"] = time.monotonic() - t_warm
 
             steal0 = steal_ticks()
+            cpu0 = mem.cpu_s()
             t0 = time.monotonic()
             deadline = t0 + args.seconds
             while True:
@@ -282,20 +350,40 @@ def main() -> int:
                 if args.trace or now >= deadline or now - t_start > HARD_STOP_S:
                     break
             window_s = time.monotonic() - t0
+            window_cpu_s = mem.cpu_s() - cpu0
             steal_window = (steal_ticks() - steal0) / 100.0
+            t_check = time.monotonic()
             wl.check()
+            phases["check"] = time.monotonic() - t_check
+            t_comp = time.monotonic()
+            companions = [
+                run_companion(name, ctx, sql_settings(args.workload, cpus))
+                for name in (COMPANIONS.get(args.workload, ()) if args.trace else ())
+            ]
+            for c in companions:
+                wl.attempted += c.attempted
+                wl.failed += c.failed
+                wl.failures += [f"{c.name}: {f}" for f in c.failures]
+            phases["companions"] = time.monotonic() - t_comp
             e2e = {
-                "setup_s": statistics.median(setup_times),
+                # CPU seconds, like the units' metrics; wall times are in
+                # the detail line
+                "setup_s": statistics.median(setup_cpu),
                 **wl.e2e(),
                 "disk_mb": wl.disk_mb(),
             }
         finally:
+            t_stop = time.monotonic()
             if spark is not None:
                 stop_spark(spark, mem)
             mem.stop()
+            phases["stop"] = time.monotonic() - t_stop
 
         if args.trace:
             values = {m["name"]: 0.0 for m in declared}
+            # the host's own numbers win where names are shared (spark.*)
+            for c in companions:
+                values.update(c.layers())
             values.update(wl.layers())
             values["trace.overhead_pct"] = wl.overhead_pct()
             tracer.write(
@@ -319,8 +407,11 @@ def main() -> int:
         "nproc": cpus,
         "settings": settings,
         "session_start_s": session_s,
+        "phases_s": phases,
         "setup_s_samples": setup_times,
+        "setup_cpu_s_samples": setup_cpu,
         "window_s": window_s,
+        "window_cpu_s": window_cpu_s,
         "units": len(wl.samples),
         "unit": wl.unit_name,
         "samples_s": wl.samples,
@@ -329,6 +420,7 @@ def main() -> int:
         "peak_pss_mb_by_process": {k: v / 1024.0 for k, v in mem.peak_by_name_kb.items()},
         "steal_s_run": (steal_ticks() - steal_run0) / 100.0,
         "named": wl.named(),
+        "companions": {c.name: c.named() for c in companions},
         "error_rate": wl.failed / max(wl.attempted, 1),
         "failures": wl.failures[:20],
         "wall_s": time.monotonic() - t_start,

@@ -24,17 +24,17 @@ with open(os.path.join(ROOT, "BENCHMARK.json")) as _fh:
 WORKLOADS = [w["name"] for w in SPEC["workloads"]]
 SEED = 7
 
-# span-name prefixes each workload's traced run must record
+# span-name prefixes each workload's traced run must record; the catalog's
+# traced run also traces the frontier round, which is not a workload of its own
 LAYER_SPANS = {
-    "frontier_round": ["dedup.", "politeness.", "fetcher.", "parse.", "documents.",
-                       "frontier_round.round", "frontier_round.ladder"],
     "site_crawl": ["engine.round", "engine.plan.", "storage.stage.", "storage.commit_multi",
                    "storage.expire", "site_crawl.crawl"],
     "catalog_corpus": ["catalog_corpus.pass"] + [
         f"catalog.{m['name'][len('catalog.'):-len('_s')]}"
         for m in SPEC["per_layer"]
         if m["name"].startswith("catalog.") and m["name"].count(".") == 1
-    ],
+    ] + ["dedup.", "politeness.", "fetcher.", "parse.", "documents.",
+         "frontier_round.round", "frontier_round.ladder"],
 }
 
 

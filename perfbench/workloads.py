@@ -1,4 +1,7 @@
-"""The three benchmark workloads.
+"""The benchmark's workloads.
+
+``site_crawl`` and ``catalog_corpus`` are the workloads of BENCHMARK.json;
+``frontier_round`` runs inside the catalog's traced run, or on its own.
 
 Each workload makes its inputs from the seed, then exposes
 
@@ -9,8 +12,10 @@ Each workload makes its inputs from the seed, then exposes
 - ``check()``: failures found in the program's outputs;
 - ``e2e()`` / ``layers()``: metric dicts.
 
-Every unit appends to ``self.samples`` (seconds) and ``self.items``; a unit
-that raises is counted in ``self.failed`` and the loop goes on.
+Every unit appends to ``self.samples`` (wall seconds), ``self.cpu_samples``
+(CPU seconds of the process tree) and ``self.items``; a unit that raises is
+counted in ``self.failed`` and the loop goes on.  The gated metrics are
+CPU-based: on a shared host, wall time follows the neighbours' load.
 """
 
 from __future__ import annotations
@@ -68,7 +73,9 @@ class Workload:
         self.tracer = ctx.tracer
         self.seed = ctx.seed
         self.tiny = ctx.scale == "tiny"
+        self.cpu_s = ctx.cpu_s
         self.samples: list[float] = []
+        self.cpu_samples: list[float] = []
         self.items: list[int] = []
         self.attempted = 0
         self.failed = 0
@@ -93,7 +100,11 @@ class Workload:
         return sum(self.items) / sum(self.samples) if self.samples else 0.0
 
     def e2e(self) -> dict:
-        return {"round_s_p50": median(self.samples), "items_per_s": self.items_per_s()}
+        # means, not medians: a crawl has three rounds, one of them cold,
+        # and the median of three is a single round's noise
+        cpu = sum(self.cpu_samples)
+        return {"unit_cpu_s": cpu / len(self.cpu_samples) if self.cpu_samples else 0.0,
+                "items_per_cpu_s": sum(self.items) / cpu if cpu else 0.0}
 
     def overhead_pct(self) -> float:
         if not self.baseline or not self.traced_samples:
@@ -238,25 +249,28 @@ class FrontierRound(Workload):
         with self.tracer.span("round.execute"):
             return docs.count()
 
-    def _record(self, n_docs: int, dt: float, into: list[float]) -> None:
+    def _record(self, n_docs: int, dt: float, into: list[float]) -> bool:
         self.attempted += 1
         if n_docs != self.ITEMS_PER_PAGE * self.expected:
             self.fail(
                 f"round {self.attempted}: {n_docs} docs, expected "
                 f"{self.ITEMS_PER_PAGE * self.expected}"
             )
-            return
+            return False
         into.append(dt)
         if into is self.samples:
             self.items.append(n_docs // self.ITEMS_PER_PAGE)
+        return True
 
     def warm(self) -> None:
         self._round()
 
     def unit(self) -> None:
-        t0 = time.monotonic()
+        t0, cpu0 = time.monotonic(), self.cpu_s()
         n_docs = self._round()
-        self._record(n_docs, time.monotonic() - t0, self.samples)
+        dt, cpu = time.monotonic() - t0, self.cpu_s() - cpu0
+        if self._record(n_docs, dt, self.samples):
+            self.cpu_samples.append(cpu)
 
     def traced(self) -> None:
         from spiders_for_all_spark.engine import ok_cond
@@ -389,7 +403,7 @@ class SiteCrawl(Workload):
 
     def __init__(self, ctx):
         super().__init__(ctx)
-        self.n_hosts = 4 if self.tiny else 256
+        self.n_hosts = 4 if self.tiny else 128
         self.budget = 4
         self.crawler = None
         self.crawls: list[dict] = []  # one per finished crawl
@@ -453,14 +467,15 @@ class SiteCrawl(Workload):
         run_round = crawler.run_round
 
         def timed_round(round_no):
-            t0 = time.monotonic()
+            t0, cpu0 = time.monotonic(), self.cpu_s()
             rs = run_round(round_no)
-            rounds.append({"round": round_no, "s": time.monotonic() - t0, "stats": rs})
+            rounds.append({"round": round_no, "s": time.monotonic() - t0,
+                           "cpu": self.cpu_s() - cpu0, "stats": rs})
             return rs
 
         crawler.run_round = timed_round
         try:
-            crawler.run()
+            crawler.run(max_rounds=self.sim.rounds)
         finally:
             crawler.run_round = run_round
 
@@ -476,6 +491,7 @@ class SiteCrawl(Workload):
             return
         finally:
             self.samples.extend(r["s"] for r in rounds)
+            self.cpu_samples.extend(r["cpu"] for r in rounds)
             self.items.extend(r["stats"].scheduled for r in rounds)
         if not self.crawls:
             self.disk = dir_bytes(crawler.storage.warehouse)[0] / 1e6
@@ -524,10 +540,10 @@ class SiteCrawl(Workload):
 
     # -- traced crawl ----------------------------------------------------
     def traced(self) -> None:
-        """An untraced crawl to warm up, the traced crawl, then an
-        untraced crawl as the overhead baseline."""
-        with self.tracer.paused():
-            self.unit()
+        """The traced crawl, then an untraced crawl as the overhead
+        baseline.  A warm-up crawl before them would not fit the run's
+        time limit, so the traced crawl runs colder than the baseline and
+        this workload's ``trace.overhead_pct`` is an upper bound."""
         self._traced_crawl()
         n = len(self.samples)
         with self.tracer.paused():
@@ -573,7 +589,7 @@ class SiteCrawl(Workload):
         self.attempted += 1
         try:
             with tr.span("site_crawl.crawl", trace="crawl-traced"):
-                crawler.run()
+                crawler.run(max_rounds=self.sim.rounds)
         except Exception as exc:
             self.fail(f"traced crawl: {type(exc).__name__}: {exc}")
         finally:
@@ -672,7 +688,7 @@ def canon_rows(cols: list[str], rows) -> list[str]:
 
 class CatalogCorpus(Workload):
     """One pass over a fixed list of corpus queries from ``plans.catalog``
-    on a seeded corpus, each to a noop sink, with AQE on."""
+    on a seeded corpus, each query's rows collected, with AQE on."""
 
     name = "catalog_corpus"
     unit_name = "pass"
@@ -692,6 +708,7 @@ class CatalogCorpus(Workload):
         self.corpus = None
         self.per_query: dict[str, list[float]] = {q: [] for q in self.QUERIES}
         self.rows: dict[str, int] = {}
+        self.results: dict[str, tuple[list[str], list[tuple]]] = {}
         self.plan_s: dict[str, list[float]] = {q: [] for q in self.QUERIES}
         self.traced_roots: list[dict] = []
 
@@ -716,8 +733,42 @@ class CatalogCorpus(Workload):
         return catalog.QUERIES[self.QUERIES[short]]
 
     def warm(self) -> None:
-        """The correctness pass: every query's rows against its DuckDB
-        oracle.  It runs first, so it also warms the session."""
+        """Nothing: the measured pass runs cold, as a batch job runs each of
+        its queries once in a fresh session (the set-ups read the tables)."""
+
+    def _pass(self, collect: bool) -> float | None:
+        """One pass, each query to a noop sink or, with ``collect``, with its
+        rows collected (the first such pass's rows are kept for ``check``)."""
+        total, results = 0.0, {}
+        for short in self.QUERIES:
+            self.attempted += 1
+            t0 = time.monotonic()
+            try:
+                df = self._fn(short)(self.spark, self.corpus)
+                if collect:
+                    results[short] = (df.columns, [tuple(r) for r in df.collect()])
+                else:
+                    noop(df)
+            except Exception as exc:
+                self.fail(f"{short}: {type(exc).__name__}: {exc}")
+                return None
+            dt = time.monotonic() - t0
+            total += dt
+            self.per_query[short].append(dt)
+        if collect and not self.results:
+            self.results = results
+        return total
+
+    def unit(self) -> None:
+        cpu0 = self.cpu_s()
+        total = self._pass(collect=True)
+        if total is not None:
+            self.samples.append(total)
+            self.cpu_samples.append(self.cpu_s() - cpu0)
+            self.items.append(len(self.QUERIES))
+
+    def check(self) -> None:
+        """Every query's rows against its DuckDB oracle."""
         import duckdb
 
         from spiders_for_all_spark.plans import catalog
@@ -726,54 +777,34 @@ class CatalogCorpus(Workload):
         con.execute(f"SET temp_directory = '{self.path('duckdb')}'")
         for t in self.TABLES:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{self.corpus}/{t}.parquet')")
-        for short, qname in self.QUERIES.items():
-            self.attempted += 1
+        for short, (cols, got) in self.results.items():
             try:
-                sdf = self._fn(short)(self.spark, self.corpus)
-                got = [tuple(r) for r in sdf.collect()]
-                res = con.execute(catalog.ORACLES[qname])
+                res = con.execute(catalog.ORACLES[self.QUERIES[short]])
                 want_cols = [d[0] for d in res.description]
                 want = res.fetchall()
             except Exception as exc:
-                self.fail(f"{short}: {type(exc).__name__}: {exc}")
+                self.fail(f"{short} oracle: {type(exc).__name__}: {exc}")
                 continue
             self.rows[short] = len(got)
-            if sorted(sdf.columns) != sorted(want_cols):
-                self.fail(f"{short}: columns {sorted(sdf.columns)} vs {sorted(want_cols)}")
-            elif canon_rows(sdf.columns, got) != canon_rows(want_cols, want):
+            if sorted(cols) != sorted(want_cols):
+                self.fail(f"{short}: columns {sorted(cols)} vs {sorted(want_cols)}")
+            elif canon_rows(cols, got) != canon_rows(want_cols, want):
                 self.fail(f"{short}: {len(got)} rows differ from the oracle's {len(want)}")
         con.close()
 
-    def _pass(self) -> float | None:
-        total = 0.0
-        for short in self.QUERIES:
-            self.attempted += 1
-            t0 = time.monotonic()
-            try:
-                noop(self._fn(short)(self.spark, self.corpus))
-            except Exception as exc:
-                self.fail(f"{short}: {type(exc).__name__}: {exc}")
-                return None
-            dt = time.monotonic() - t0
-            total += dt
-            self.per_query[short].append(dt)
-        return total
-
-    def unit(self) -> None:
-        total = self._pass()
-        if total is not None:
-            self.samples.append(total)
-            self.items.append(len(self.QUERIES))
-
     def _untraced_pass(self) -> None:
         with self.tracer.paused():
-            total = self._pass()
+            total = self._pass(collect=False)
         if total is not None:
             self.baseline.append(total)
 
     def traced(self) -> None:
-        """A traced pass between two untraced ones, the overhead baseline."""
+        """The measured pass untraced, to warm the session and give the
+        rows to check, then a traced pass between two untraced ones, the
+        overhead baseline."""
         tr = self.tracer
+        with tr.paused():
+            self.unit()
         self._untraced_pass()
         with tr.span("catalog_corpus.pass", trace="pass") as root:
             t_pass = time.monotonic()
@@ -796,12 +827,14 @@ class CatalogCorpus(Workload):
 
     def named(self) -> dict:
         return {"catalog_pass_s": median(self.samples), "passes": len(self.samples),
-                "queries": len(self.QUERIES), "rows": dict(self.rows)}
+                "queries": len(self.QUERIES), "rows": dict(self.rows),
+                "query_s": {q: median(ts) for q, ts in self.per_query.items()}}
 
     def layers(self) -> dict:
         out: dict[str, float] = {}
         for short in self.QUERIES:
-            out[f"catalog.{short}_s"] = median(self.per_query[short])
+            # the untraced baseline passes, not the cold first pass
+            out[f"catalog.{short}_s"] = median(self.per_query[short][1:])
             out[f"catalog.{short}.plan_s"] = median(self.plan_s[short])
             out[f"catalog.{short}.rows"] = float(self.rows.get(short, 0))
         out.update(self.spark_layers(self.traced_roots))
