@@ -187,9 +187,8 @@ def add_crawl_args(ap: argparse.ArgumentParser) -> None:
     ap.add_argument("--warehouse", default=None)
     ap.add_argument("--budget", type=int, default=2)
     ap.add_argument("--rounds", type=int, default=30)
-    ap.add_argument("--bloom", action="store_true")
-    ap.add_argument("--bloom-partitioned", action="store_true",
-                    help="cogrouped bloom probe (no driver broadcast)")
+    ap.add_argument("--bloom", action="store_true",
+                    help="partitioned bloom seen-prefilter")
     ap.add_argument("--cuckoo", action="store_true",
                     help="deletable cuckoo seen-prefilter (re-crawl eviction)")
     ap.add_argument("--salt-n", type=int, default=1)
@@ -242,8 +241,7 @@ def run_crawl(spark: SparkSession, ns: argparse.Namespace) -> dict:
         CrawlConfig(
             max_rounds=ns.rounds,
             default_budget=ns.budget,
-            use_bloom=ns.bloom or ns.bloom_partitioned,
-            bloom_partitioned=ns.bloom_partitioned,
+            use_bloom=ns.bloom,
             use_cuckoo=ns.cuckoo,
             salt_n=ns.salt_n,
         ),

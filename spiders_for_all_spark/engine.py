@@ -4,8 +4,9 @@ Replaces the reference's ``run() = before(); save_items(get_items()); after``
 driver (reference: core/spider.py:245-248,295-327) with the round loop of
 SURVEY §3.1:
 
-    frontier -> anti-join seen (exact | incremental bloom | deletable
-                cuckoo, each + exact-confirm; eviction tombstones subtracted)
+    frontier -> anti-join seen (exact | bloom | deletable cuckoo, probed
+                partition-wise + exact-confirm; eviction tombstones
+                subtracted)
              -> robots gate (broadcast join)
              -> politeness window top-k per host (per-host salting for
                 hot hosts only)
@@ -16,7 +17,7 @@ SURVEY §3.1:
              -> documents MERGE (merge-on-read delta, upsert by doc_id)
              -> media_meta (payloads sniffed from sink files)
              -> successors/retries -> next frontier
-             -> seen += fetched; fetch_log += lineage; bloom |= delta
+             -> seen += fetched; fetch_log += lineage; filter insert delta
              -> ONE atomic multi-table snapshot commit (resumable
                 checkpoint, north_rule); periodic compaction + expiry
 
@@ -51,31 +52,19 @@ class CrawlConfig:
     max_depth: int = 3
     total_doc_cap: int | None = None  # A2: global stop condition
     salt_n: int = 1  # >1 enables two-phase salted scheduling
+    # seen prefilter in front of the exact anti-join (dedup.SeenFilter):
+    # a bloom, or a cuckoo, which supports DELETIONS, so re-crawl eviction
+    # (evict()) removes hashes from the probe filter itself rather than
+    # relying on the exact-confirm alone (north_star: "cuckoo-filter
+    # fallback for deletions"); cuckoo wins when both are set.  Either is
+    # a committed table: each round inserts just the seen DELTA cogrouped
+    # (O(delta)/round) instead of rebuilding the filter from the full seen
+    # set (VERDICT r03 item 2); full rebuild+resize at compaction
     use_bloom: bool = False
-    # True routes the bloom probe through the cogrouped partition-wise path
-    # (dedup.seen_anti_join_bloom_partitioned): no driver collect/broadcast of
-    # the bitmap table — required once the bitmaps outgrow driver memory
-    # (~GBs at 10^10 keys); the broadcast path is faster while they fit.
-    bloom_partitioned: bool = False
-    # maintain the bloom as a committed table, OR-merging each round's
-    # seen-delta bloom (O(delta)/round) instead of re-scanning the full
-    # seen set per round; full rebuild + resize happens at compaction
-    bloom_incremental: bool = True
-    # cuckoo-filter seen prefilter instead of bloom: supports DELETIONS, so
-    # re-crawl eviction (evict()) removes hashes from the probe filter
-    # itself rather than relying on the exact-confirm alone (north_star:
-    # "cuckoo-filter fallback for deletions")
     use_cuckoo: bool = False
-    # maintain the cuckoo filter as a committed table (mirror of
-    # bloom_incremental): each round bulk-inserts just the seen DELTA
-    # cogrouped (O(delta)/round) instead of rebuilding the filter from the
-    # full seen set — the last O(|seen|)-per-round job in the engine
-    # (VERDICT r03 item 2); evict() deletes fingerprints in the same
-    # atomic flip as its tombstones; full rebuild+resize at compaction
-    cuckoo_incremental: bool = True
     n_buckets: int = D.DEFAULT_BUCKETS
-    bloom_expected_per_bucket: int = 10_000
-    cuckoo_capacity_per_bucket: int = 10_000
+    # expected seen keys per bucket: the size of a new filter bucket
+    filter_capacity_per_bucket: int = 10_000
     # fold append-only seen/fetch_log deltas back into one dir every N rounds
     # (Iceberg rewrite_data_files): keeps file counts bounded on long crawls
     compact_every: int = 64
@@ -140,6 +129,13 @@ class Crawler:
         self.config = config or CrawlConfig()
         self.robots = robots
         self.host_budget = host_budget
+        # the only place the seen-filter mode is read
+        cfg = self.config
+        self.seen_filter = D.SeenFilter(
+            "cuckoo" if cfg.use_cuckoo else "bloom" if cfg.use_bloom else "exact",
+            cfg.n_buckets,
+            cfg.filter_capacity_per_bucket,
+        )
         # default media to the warehouse file sink: bytes stream to files
         # INSIDE the fetch worker and never materialize in a plan column
         # (SURVEY §2 S6; VERDICT r02 wrong-item 3).  Only fetchers that
@@ -183,21 +179,31 @@ class Crawler:
             "frontier", FR.dedup_frontier(frontier.unionByName(rows))
         )
         staged = [staged_evicted, staged_frontier]
-        if self.storage.latest_snapshot("cuckoo") is not None:
+        filt = self.seen_filter
+        if filt.deletes and self.storage.latest_snapshot(filt.table) is not None:
             # the persisted probe filter drops the fingerprints in the
             # SAME flip as the tombstones — filter and tombstone view of
             # the live seen set can never diverge across a crash
+            filt.filters = self.storage.read(filt.table)
             staged.append(
                 self.storage.stage_overwrite(
-                    "cuckoo",
-                    D.cuckoo_delete(
-                        self.storage.read("cuckoo"),
-                        rows.select("url_hash"),
-                        self.config.n_buckets,
-                    ),
+                    filt.table, filt.delete(rows.select("url_hash"))
                 )
             )
         self.storage.commit_multi(staged)
+
+    def _live_seen(self) -> tuple[DataFrame, DataFrame | None]:
+        """(effective seen set, eviction tombstones or None).
+
+        Effective seen = appended history minus eviction tombstones; the
+        subtraction joins a 10^10-row table against an O(pending
+        evictions) one — broadcast-cheap, and skipped entirely until the
+        first evict() call."""
+        seen = self.storage.read("seen")
+        if self.storage.latest_snapshot("evicted") is None:
+            return seen, None
+        evicted = self.storage.read("evicted")
+        return seen.join(F.broadcast(evicted), on="url_hash", how="left_anti"), evicted
 
     def next_round_no(self) -> int:
         log = self.storage.read("fetch_log")
@@ -243,66 +249,20 @@ class Crawler:
         cfg = self.config
         storage = self.storage
         frontier = storage.read("frontier")
-        seen_all = storage.read("seen")
-        evicted = (
-            storage.read("evicted")
-            if storage.latest_snapshot("evicted") is not None
-            else None
-        )
-        # effective seen = appended history minus eviction tombstones; the
-        # subtraction joins a 10^10-row table against an O(pending
-        # evictions) one — broadcast-cheap, and skipped entirely until the
-        # first evict() call
-        seen = (
-            seen_all.join(F.broadcast(evicted), on="url_hash", how="left_anti")
-            if evicted is not None
-            else seen_all
-        )
+        seen, evicted = self._live_seen()
 
         # 1. J1 — seen anti-join (bloom/cuckoo prefilter + exact confirm at
         # scale; the cuckoo path applies eviction DELETIONS to the filter)
-        if cfg.use_cuckoo:
-            if (
-                cfg.cuckoo_incremental
-                and storage.latest_snapshot("cuckoo") is not None
-            ):
+        filt = self.seen_filter
+        if filt.table is not None:
+            if storage.latest_snapshot(filt.table) is None:
+                filt.build(seen)  # first use: nothing committed yet
+            else:
                 # the filter was committed with last round's seen delta
-                # (and evict() already removed tombstoned fingerprints) —
-                # no O(|seen|) rebuild on the hot path
-                cuckoo = storage.read("cuckoo")
-            else:
-                cuckoo = D.build_cuckoo(
-                    seen_all, cfg.n_buckets, cfg.cuckoo_capacity_per_bucket
-                )
-                if evicted is not None:
-                    cuckoo = D.cuckoo_delete(cuckoo, evicted, cfg.n_buckets)
-            candidates = D.seen_anti_join_cuckoo(
-                frontier, seen, cuckoo, cfg.n_buckets
-            )
-        elif cfg.use_bloom:
-            if cfg.bloom_incremental and storage.latest_snapshot("bloom") is not None:
-                # the filter was committed with last round's seen delta —
-                # no O(|seen|) rebuild on the hot path
-                bloom = storage.read("bloom")
-                prow = bloom.select("n_bits", "n_hashes").first()
-                bloom_sizing = (
-                    (int(prow["n_bits"]), int(prow["n_hashes"])) if prow else None
-                )
-            else:
-                bloom = D.build_bloom(
-                    seen, cfg.n_buckets, cfg.bloom_expected_per_bucket
-                )
-                bloom_sizing = None
-            if cfg.bloom_partitioned:
-                candidates = D.seen_anti_join_bloom_partitioned(
-                    frontier, seen, bloom, cfg.n_buckets
-                )
-            else:
-                candidates = D.seen_anti_join_bloom(
-                    frontier, seen, bloom, cfg.n_buckets
-                )
-        else:
-            candidates = D.seen_anti_join(frontier, seen)
+                # (and evict() already removed tombstoned cuckoo
+                # fingerprints) — no O(|seen|) rebuild on the hot path
+                filt.filters = storage.read(filt.table)
+        candidates = filt.probe(frontier, seen)
 
         # 2. robots gate (broadcast) + 3. politeness priority queue.
         # `candidates` (pre-gate) is reused below as the frontier remainder
@@ -458,24 +418,12 @@ class Crawler:
         succ_new = succ.join(
             seen_delta.select("url_hash"), on="url_hash", how="left_anti"
         )
-        # the "minus old seen" leg goes through the SAME prefilter family as
-        # the candidates anti-join: without it, this one join would still
+        # the "minus old seen" leg goes through the SAME prefilter as the
+        # candidates anti-join: without it, this one join would still
         # shuffle the full 10^10-row seen set every round even with the
         # bloom/cuckoo paths on (the filters are row-identical to the exact
         # join, so the frontier is unchanged — golden-tested)
-        if cfg.use_cuckoo:
-            succ_new = D.seen_anti_join_cuckoo(succ_new, seen, cuckoo, cfg.n_buckets)
-        elif cfg.use_bloom:
-            if cfg.bloom_partitioned:
-                succ_new = D.seen_anti_join_bloom_partitioned(
-                    succ_new, seen, bloom, cfg.n_buckets
-                )
-            else:
-                succ_new = D.seen_anti_join_bloom(succ_new, seen, bloom, cfg.n_buckets)
-        else:
-            succ_new = succ_new.join(
-                seen.select("url_hash"), on="url_hash", how="left_anti"
-            )
+        succ_new = filt.probe(succ_new, seen)
         next_frontier = FR.dedup_frontier(
             remainder.unionByName(retries).unionByName(succ_new)
         )
@@ -505,30 +453,12 @@ class Crawler:
             stage_jobs.append(
                 lambda: storage.stage_append("media_meta", media_meta)
             )
-        if cfg.use_bloom and not cfg.use_cuckoo and cfg.bloom_incremental:
-            # OR the round's delta into the persisted filter — O(delta)
+        if filt.table is not None:
+            # insert the round's delta into the persisted filter — O(delta)
             # work, committed in the same flip as the seen delta itself so
             # the filter and the set can never diverge across a crash
-            delta_bloom = D.build_bloom(
-                seen_delta, cfg.n_buckets, cfg.bloom_expected_per_bucket,
-                params=bloom_sizing,
-            )
             stage_jobs.append(
-                lambda: storage.stage_overwrite(
-                    "bloom", D.merge_blooms(bloom, delta_bloom)
-                )
-            )
-        if cfg.use_cuckoo and cfg.cuckoo_incremental:
-            # bulk-insert the round's delta into the persisted filter —
-            # same O(delta) discipline and same atomic flip as the bloom
-            stage_jobs.append(
-                lambda: storage.stage_overwrite(
-                    "cuckoo",
-                    D.cuckoo_insert(
-                        cuckoo, seen_delta, cfg.n_buckets,
-                        cfg.cuckoo_capacity_per_bucket,
-                    ),
-                )
+                lambda: storage.stage_overwrite(filt.table, filt.insert(seen_delta))
             )
         if evicted is not None:
             # clear tombstones whose URL was re-fetched this round (its hash
@@ -560,11 +490,9 @@ class Crawler:
         # passes; other tables expire in the maintenance block below
         if cfg.expire_keep_last:
             storage.expire_snapshots("frontier", keep_last=cfg.expire_keep_last)
-            if storage.latest_snapshot("bloom") is not None:
-                # like frontier, the bloom table is overwritten per round
-                storage.expire_snapshots("bloom", keep_last=cfg.expire_keep_last)
-            if storage.latest_snapshot("cuckoo") is not None:
-                storage.expire_snapshots("cuckoo", keep_last=cfg.expire_keep_last)
+            if filt.table is not None:
+                # like frontier, the filter table is overwritten per round
+                storage.expire_snapshots(filt.table, keep_last=cfg.expire_keep_last)
 
         # maintenance: fold append/MoR deltas periodically (size-tiered for
         # the append tables, touched-buckets-only for documents) and expire
@@ -574,37 +502,10 @@ class Crawler:
             storage.compact("fetch_log")
             storage.compact("documents")
             storage.compact("media_meta")
-            if cfg.use_bloom and not cfg.use_cuckoo and cfg.bloom_incremental:
-                # full rebuild RESIZES the filter to the grown seen set so
-                # fpp stays bounded over a long crawl (the incremental ORs
-                # keep the size fixed between rebuilds)
-                seen_now = storage.read("seen")
-                per_bucket = max(
-                    cfg.bloom_expected_per_bucket,
-                    int(seen_now.count() * 1.25) // max(cfg.n_buckets, 1) + 1,
-                )
-                storage.commit(
-                    "bloom",
-                    D.build_bloom(seen_now, cfg.n_buckets, per_bucket),
-                )
-            if cfg.use_cuckoo and cfg.cuckoo_incremental:
-                # rebuild from the LIVE seen set (minus pending eviction
-                # tombstones), resized so overflowed buckets recover and
-                # load factor stays at design level over a long crawl
-                seen_now = storage.read("seen")
-                if storage.latest_snapshot("evicted") is not None:
-                    seen_now = seen_now.join(
-                        F.broadcast(storage.read("evicted")),
-                        on="url_hash", how="left_anti",
-                    )
-                per_bucket = max(
-                    cfg.cuckoo_capacity_per_bucket,
-                    int(seen_now.count() * 1.25) // max(cfg.n_buckets, 1) + 1,
-                )
-                storage.commit(
-                    "cuckoo",
-                    D.build_cuckoo(seen_now, cfg.n_buckets, per_bucket),
-                )
+            if filt.table is not None:
+                # the full rebuild (from the LIVE seen set, minus pending
+                # eviction tombstones) RESIZES the filter to the grown set
+                storage.commit(filt.table, filt.rebuild(self._live_seen()[0]))
             if cfg.expire_keep_last:
                 for t in ("seen", "fetch_log", "documents", "media_meta", "evicted"):
                     if storage.latest_snapshot(t) is not None:

@@ -1,20 +1,27 @@
-"""URL-seen set: exact anti-join + partitioned-bloom prefilter (J1).
+"""URL-seen set: exact anti-join, fronted by a per-bucket bloom or cuckoo
+prefilter (J1).
 
 The reference dedups via DB unique constraints and ``sorted(set(ids))``
 (reference: core/spider.py:218-236, utils/helper.py:55,
 spiders/bilibili/downloader.py:295).  At 10^10 URLs the exact seen table is
-hash-bucketed by ``pmod(url_hash, n_buckets)`` and fronted by per-bucket
-bloom bitmaps built in an Arrow-batched ``applyInPandas`` aggregation
-(Spark's ``bloom_filter_agg`` is JVM-internal and not persistable, SURVEY
-§4.3.1).  Bloom *pass* (possibly-seen) rows are always exact-confirmed
-against their bucket before being dropped, so false positives can never
-lose a URL — the bloom only shrinks the exact join's probe side.
+hash-bucketed by ``pmod(url_hash, n_buckets)`` and fronted by one filter
+per bucket (bloom bitmap or cuckoo table) built in an Arrow-batched
+``applyInPandas`` aggregation (Spark's ``bloom_filter_agg`` is JVM-internal
+and not persistable, SURVEY §4.3.1).  Probes run partition-wise: the
+frontier is shuffled by bucket once and cogrouped with its bucket's filter
+row, so the filter table never passes through the driver (at 10^10 keys it
+is GBs).  Filter *pass* (possibly-seen) rows are always exact-confirmed
+before being dropped, so false positives can never lose a URL — the filter
+only shrinks the exact join's probe side.  Filters are maintained
+incrementally: a round's seen delta is inserted cogrouped, O(delta) work.
+:class:`SeenFilter` puts one mode (exact, bloom, cuckoo) behind one
+interface.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -35,12 +42,108 @@ def seen_anti_join(frontier: DataFrame, seen: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Per-bucket plumbing shared by both filter kinds.  A filter table holds one
+# row per bucket; each kind supplies how to build a bucket's row from its
+# hashes, how to add hashes to a stored row, and how to test membership.
+
+
+def _build(seen: DataFrame, n_buckets: int, fresh: Callable, schema: str) -> DataFrame:
+    """One filter row per bucket of ``seen``: ``fresh(bucket, hashes)``."""
+
+    def agg(pdf: pd.DataFrame) -> pd.DataFrame:
+        return fresh(int(pdf["bucket"].iloc[0]), pdf["url_hash"].to_numpy(np.int64))
+
+    bucketed = with_bucket(seen.select("url_hash"), n_buckets)
+    return bucketed.groupBy("bucket").applyInPandas(agg, schema=schema)
+
+
+def _cogroup_keys(
+    filters: DataFrame, keys: DataFrame, n_buckets: int, fn: Callable, schema: str
+) -> DataFrame:
+    """``fn(filter_rows, key_rows)`` once per bucket present on either side:
+    each bucket's filter row meets only its own keys."""
+    keyed = with_bucket(keys.select("url_hash"), n_buckets)
+    return (
+        filters.groupby("bucket")
+        .cogroup(keyed.groupby("bucket"))
+        .applyInPandas(fn, schema=schema)
+    )
+
+
+def _insert(
+    filters: DataFrame,
+    additions: DataFrame,
+    n_buckets: int,
+    fresh: Callable,
+    add: Callable,
+    schema: str,
+) -> DataFrame:
+    """Cogrouped bulk insert — the O(delta) incremental-maintenance path.
+
+    Untouched buckets pass through by reference; a bucket with additions
+    but no filter yet gets ``fresh(bucket, hashes)`` (first rows ever
+    hashed there); a stored row becomes ``add(row, hashes)``.
+    """
+
+    def apply_ins(stored: pd.DataFrame, toadd: pd.DataFrame) -> pd.DataFrame:
+        if len(toadd) == 0:
+            return stored
+        hashes = toadd["url_hash"].to_numpy(np.int64)
+        if len(stored) == 0:
+            return fresh(int(toadd["bucket"].iloc[0]), hashes)
+        return add(stored, hashes)
+
+    return _cogroup_keys(filters, additions, n_buckets, apply_ins, schema)
+
+
+def _probe(
+    frontier: DataFrame,
+    seen: DataFrame,
+    filters: DataFrame,
+    n_buckets: int,
+    member: Callable,
+) -> DataFrame:
+    """Filter-prefiltered anti-join: cogrouped probe + exact confirm.
+
+    ``member(filter_row, hashes)`` marks possibly-seen hashes of one bucket.
+    Output is row-identical to :func:`seen_anti_join` over the same seen
+    set — the filter can only send extra rows to the exact confirm, never
+    skip one.
+    """
+    fb = with_bucket(frontier, n_buckets)
+    out_schema = fb.withColumn("_maybe", F.lit(True)).schema
+    out_cols = [f.name for f in out_schema.fields]
+
+    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if len(left) == 0:
+            return pd.DataFrame(columns=out_cols)
+        if len(right) == 0:
+            return left.assign(_maybe=False)[out_cols]
+        hit = member(right, left["url_hash"].to_numpy(np.int64))
+        return left.assign(_maybe=hit)[out_cols]
+
+    probed = (
+        fb.groupby("bucket")
+        .cogroup(filters.groupby("bucket"))
+        .applyInPandas(probe, schema=out_schema)
+    )
+    definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe", "bucket")
+    maybe_seen = probed.filter(F.col("_maybe")).drop("_maybe", "bucket")
+    confirmed_new = maybe_seen.join(
+        seen.select("url_hash"), on="url_hash", how="left_anti"
+    )
+    return definitely_new.unionByName(confirmed_new)
+
+
+# ---------------------------------------------------------------------------
 # Partitioned bloom filter.
 #
 # Layout: one row per bucket — (bucket int, n_bits int, n_hashes int,
 # bits binary).  k probe positions are derived from the 64-bit url_hash by
 # double hashing: pos_i = (h1 + i*h2) mod n_bits with h1 = high 32 bits,
 # h2 = low 32 bits | 1 (Kirsch–Mitzenmacher; public-domain construction).
+
+BLOOM_SCHEMA = "bucket int, n_bits int, n_hashes int, bits binary"
 
 
 def _positions(hashes: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
@@ -59,112 +162,77 @@ def bloom_params(expected_per_bucket: int, fpp: float = 0.01) -> tuple[int, int]
     return n_bits, min(n_hashes, 16)
 
 
+def _bloom_row(
+    bucket: int,
+    hashes: np.ndarray,
+    n_bits: int,
+    n_hashes: int,
+    bits: np.ndarray | None = None,
+) -> pd.DataFrame:
+    """One bucket's bitmap row: ``bits`` (or an empty bitmap) | hashes."""
+    bits = np.zeros(n_bits // 8, dtype=np.uint8) if bits is None else bits.copy()
+    flat = _positions(hashes, n_bits, n_hashes).ravel()
+    np.bitwise_or.at(bits, flat // 8, (1 << (flat % 8)).astype(np.uint8))
+    return pd.DataFrame(
+        {
+            "bucket": [bucket],
+            "n_bits": [n_bits],
+            "n_hashes": [n_hashes],
+            "bits": [bits.tobytes()],
+        }
+    )
+
+
 def build_bloom(
     seen: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
     expected_per_bucket: int = 10_000,
     fpp: float = 0.01,
-    params: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """Per-bucket bloom bitmaps over seen.url_hash (applyInPandas UDAF).
+    """Per-bucket bloom bitmaps over seen.url_hash (applyInPandas UDAF)."""
+    n_bits, n_hashes = bloom_params(expected_per_bucket, fpp)
+    return _build(
+        seen, n_buckets, lambda b, h: _bloom_row(b, h, n_bits, n_hashes), BLOOM_SCHEMA
+    )
 
-    ``params`` pins (n_bits, n_hashes) explicitly — required when building
-    a DELTA bloom that must OR-merge into an existing table whose sizing
-    may differ from the config (see :func:`merge_blooms`)."""
-    n_bits, n_hashes = params or bloom_params(expected_per_bucket, fpp)
 
-    def agg(pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(n_bits // 8, dtype=np.uint8)
-        pos = _positions(pdf["url_hash"].to_numpy(np.int64), n_bits, n_hashes)
-        flat = pos.ravel()
-        np.bitwise_or.at(bits, flat // 8, (1 << (flat % 8)).astype(np.uint8))
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "n_bits": [n_bits],
-                "n_hashes": [n_hashes],
-                "bits": [bits.tobytes()],
-            }
+def bloom_insert(
+    bloom: DataFrame,
+    additions: DataFrame,
+    n_buckets: int = DEFAULT_BUCKETS,
+    expected_per_bucket: int = 10_000,
+    fpp: float = 0.01,
+) -> DataFrame:
+    """Set the bits of url_hashes in the per-bucket bitmaps, cogrouped.
+
+    Blooms are mergeable sketches, so inserting a round's seen delta into
+    the stored bitmaps equals a full build over seen ∪ delta, at O(delta)
+    cost.  A stored bucket keeps its own ``n_bits``/``n_hashes`` (no
+    driver-side sizing job); a bucket with no bitmap yet is sized from
+    ``expected_per_bucket``.  Resizing happens only at the compaction
+    rebuild (:func:`build_bloom`).
+    """
+    n_bits, n_hashes = bloom_params(expected_per_bucket, fpp)
+
+    def add(stored: pd.DataFrame, hashes: np.ndarray) -> pd.DataFrame:
+        row = stored.iloc[0]
+        return _bloom_row(
+            int(row["bucket"]), hashes, int(row["n_bits"]), int(row["n_hashes"]),
+            np.frombuffer(bytes(row["bits"]), np.uint8),
         )
 
-    bucketed = with_bucket(seen.select("url_hash"), n_buckets)
-    return bucketed.groupBy("bucket").applyInPandas(
-        agg, schema="bucket int, n_bits int, n_hashes int, bits binary"
+    return _insert(
+        bloom, additions, n_buckets,
+        lambda b, h: _bloom_row(b, h, n_bits, n_hashes), add, BLOOM_SCHEMA,
     )
 
 
-def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Bitwise-OR union of two per-bucket bloom tables: bloom(S ∪ D) =
-    bloom(S) | bloom(D) for same-sized filters.
-
-    Blooms are mergeable sketches, which makes the seen filter
-    INCREMENTALLY maintainable: the engine ORs in a bloom built from just
-    the round's seen DELTA (O(delta) work) instead of re-scanning the
-    10^10-row seen set every round; a full rebuild (which also resizes the
-    filter as the crawl grows) happens only at the periodic compaction.
-    A size mismatch raises — that means the stored table needs a rebuild.
-    """
-
-    def orit(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return right
-        if len(right) == 0:
-            return left
-        la = np.frombuffer(bytes(left["bits"].iloc[0]), np.uint8)
-        rb = np.frombuffer(bytes(right["bits"].iloc[0]), np.uint8)
-        if len(la) != len(rb):
-            raise ValueError(
-                "bloom bitmap size mismatch — rebuild the stored bloom"
-            )
-        return left.assign(bits=[np.bitwise_or(la, rb).tobytes()])
-
-    return (
-        a.groupby("bucket")
-        .cogroup(b.groupby("bucket"))
-        .applyInPandas(orit, schema="bucket int, n_bits int, n_hashes int, bits binary")
-    )
-
-
-def bloom_prefilter(
-    frontier: DataFrame, bloom: DataFrame, n_buckets: int = DEFAULT_BUCKETS
-) -> tuple[DataFrame, DataFrame]:
-    """Split frontier into (definitely_new, maybe_seen) via the bloom bitmaps.
-
-    Broadcast the bitmap table (n_buckets rows, ~n_bits/8 bytes each) and
-    probe inside mapInPandas — no shuffle of the frontier at all.
-    """
-    probed_schema = frontier.withColumn("_maybe", F.lit(True)).schema
-
-    bloom_rows = {
-        int(r["bucket"]): (int(r["n_bits"]), int(r["n_hashes"]), np.frombuffer(r["bits"], np.uint8))
-        for r in bloom.collect()
-    }
-    spark = frontier.sparkSession
-    bc = spark.sparkContext.broadcast(bloom_rows)
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        filters = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            h = pdf["url_hash"].to_numpy(np.int64)
-            bucket = np.mod(h, n_buckets)
-            maybe = np.zeros(len(pdf), dtype=bool)
-            for b in np.unique(bucket):
-                f = filters.get(int(b))
-                if f is None:
-                    continue
-                n_bits, n_hashes, bits = f
-                idx = np.nonzero(bucket == b)[0]
-                pos = _positions(h[idx], n_bits, n_hashes)
-                hit = (bits[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0
-                maybe[idx] = hit.all(axis=0)
-            yield pdf.assign(_maybe=maybe)
-
-    probed = frontier.mapInPandas(probe, schema=probed_schema)
-    definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe")
-    maybe_seen = probed.filter(F.col("_maybe")).drop("_maybe")
-    return definitely_new, maybe_seen
+def _bloom_member(row: pd.DataFrame, hashes: np.ndarray) -> np.ndarray:
+    n_bits = int(row["n_bits"].iloc[0])
+    n_hashes = int(row["n_hashes"].iloc[0])
+    bits = np.frombuffer(row["bits"].iloc[0], np.uint8)
+    pos = _positions(hashes, n_bits, n_hashes)
+    return ((bits[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0).all(axis=0)
 
 
 def seen_anti_join_bloom(
@@ -173,67 +241,8 @@ def seen_anti_join_bloom(
     bloom: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
-    """Bloom-accelerated anti-join: exact-confirm only the bloom-pass rows.
-
-    Output is row-identical to :func:`seen_anti_join` — the bloom can only
-    send extra rows to the exact confirm, never skip one.
-    """
-    definitely_new, maybe_seen = bloom_prefilter(frontier, bloom, n_buckets)
-    confirmed_new = maybe_seen.join(
-        seen.select("url_hash"), on="url_hash", how="left_anti"
-    )
-    return definitely_new.unionByName(confirmed_new)
-
-
-# ---------------------------------------------------------------------------
-# Partition-wise bloom probe (no driver collect): at 10^10 keys the bitmap
-# table is GBs — too big to broadcast.  Instead the frontier is shuffled by
-# bucket once and probed against its bucket's bitmap via a cogrouped
-# applyInPandas; the bloom table rows stay distributed.
-
-
-def bloom_prefilter_partitioned(
-    frontier: DataFrame, bloom: DataFrame, n_buckets: int = DEFAULT_BUCKETS
-) -> tuple[DataFrame, DataFrame]:
-    """Partition-wise twin of :func:`bloom_prefilter` — one shuffle of the
-    frontier by bucket, zero driver-side state."""
-    fb = with_bucket(frontier, n_buckets)
-    out_schema = fb.withColumn("_maybe", F.lit(True)).schema
-    out_cols = [f.name for f in out_schema.fields]
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=out_cols)
-        if len(right) == 0:
-            return left.assign(_maybe=False)[out_cols]
-        n_bits = int(right["n_bits"].iloc[0])
-        n_hashes = int(right["n_hashes"].iloc[0])
-        bits = np.frombuffer(right["bits"].iloc[0], np.uint8)
-        pos = _positions(left["url_hash"].to_numpy(np.int64), n_bits, n_hashes)
-        hit = (bits[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0
-        return left.assign(_maybe=hit.all(axis=0))[out_cols]
-
-    probed = (
-        fb.groupby("bucket")
-        .cogroup(bloom.groupby("bucket"))
-        .applyInPandas(probe, schema=out_schema)
-    )
-    definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe", "bucket")
-    maybe_seen = probed.filter(F.col("_maybe")).drop("_maybe", "bucket")
-    return definitely_new, maybe_seen
-
-
-def seen_anti_join_bloom_partitioned(
-    frontier: DataFrame,
-    seen: DataFrame,
-    bloom: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> DataFrame:
-    definitely_new, maybe_seen = bloom_prefilter_partitioned(frontier, bloom, n_buckets)
-    confirmed_new = maybe_seen.join(
-        seen.select("url_hash"), on="url_hash", how="left_anti"
-    )
-    return definitely_new.unionByName(confirmed_new)
+    """Bloom-prefiltered anti-join, row-identical to :func:`seen_anti_join`."""
+    return _probe(frontier, seen, bloom, n_buckets, _bloom_member)
 
 
 # ---------------------------------------------------------------------------
@@ -383,6 +392,22 @@ class CuckooFilter:
 CUCKOO_SCHEMA = "bucket int, capacity int, table binary, overflowed boolean"
 
 
+def _cuckoo_row(bucket: int, hashes: np.ndarray, capacity: int) -> pd.DataFrame:
+    """One bucket's fresh filter, sized from the ACTUAL key count (never
+    below ``capacity``) and built with the vectorized bulk path."""
+    cap = max(capacity, len(hashes))
+    f = CuckooFilter(cap)
+    ok = f.bulk_insert(hashes)
+    return pd.DataFrame(
+        {
+            "bucket": [bucket],
+            "capacity": [cap],
+            "table": [f.to_bytes()],
+            "overflowed": [not ok],
+        }
+    )
+
+
 def build_cuckoo(
     seen: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
@@ -390,28 +415,15 @@ def build_cuckoo(
 ) -> DataFrame:
     """Per-bucket cuckoo filters over seen.url_hash (applyInPandas UDAF).
 
-    Sized from the ACTUAL bucket row count (never below
-    ``capacity_per_bucket``), built with the vectorized bulk path.  If any
-    key still overflows, the bucket is flagged ``overflowed`` and the probe
-    routes its whole frontier slice to the exact confirm — an overflow can
-    therefore never create a false negative (a seen URL re-emitted as new).
+    If any key still overflows, the bucket is flagged ``overflowed`` and the
+    probe routes its whole frontier slice to the exact confirm — an
+    overflow can therefore never create a false negative (a seen URL
+    re-emitted as new).
     """
-
-    def agg(pdf: pd.DataFrame) -> pd.DataFrame:
-        cap = max(capacity_per_bucket, len(pdf))
-        f = CuckooFilter(cap)
-        all_ok = f.bulk_insert(pdf["url_hash"].to_numpy(np.int64))
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "capacity": [cap],
-                "table": [f.to_bytes()],
-                "overflowed": [not all_ok],
-            }
-        )
-
-    bucketed = with_bucket(seen.select("url_hash"), n_buckets)
-    return bucketed.groupBy("bucket").applyInPandas(agg, schema=CUCKOO_SCHEMA)
+    return _build(
+        seen, n_buckets, lambda b, h: _cuckoo_row(b, h, capacity_per_bucket),
+        CUCKOO_SCHEMA,
+    )
 
 
 def cuckoo_insert(
@@ -420,50 +432,27 @@ def cuckoo_insert(
     n_buckets: int = DEFAULT_BUCKETS,
     capacity_per_bucket: int = 10_000,
 ) -> DataFrame:
-    """Bulk-insert url_hashes into the per-bucket filters — the O(delta)
-    incremental-maintenance path (mirrors ``merge_blooms`` for the bloom).
+    """Bulk-insert url_hashes into the per-bucket filters, cogrouped (the
+    twin of :func:`bloom_insert`).
 
-    Cogrouped applyInPandas: each bucket's filter meets only its own
-    additions; untouched buckets pass through by reference.  A bucket with
-    additions but no filter yet gets a fresh one (first rows ever hashed
-    there).  If an insert cannot be placed (the fixed-size table is past
-    its design load between rebuilds), the bucket is flagged
-    ``overflowed`` so the probe exact-confirms its whole slice — an
-    overflow can degrade speed, never correctness.  Resizing happens only
-    at the periodic compaction rebuild (:func:`build_cuckoo`).
+    If an insert cannot be placed (the fixed-size table is past its design
+    load between rebuilds), the bucket is flagged ``overflowed`` so the
+    probe exact-confirms its whole slice — an overflow can degrade speed,
+    never correctness.  Resizing happens only at the periodic compaction
+    rebuild (:func:`build_cuckoo`).
     """
-    adds = with_bucket(additions.select("url_hash"), n_buckets)
 
-    def apply_ins(filters: pd.DataFrame, toadd: pd.DataFrame) -> pd.DataFrame:
-        if len(filters) == 0:
-            if len(toadd) == 0:
-                return pd.DataFrame(
-                    columns=["bucket", "capacity", "table", "overflowed"]
-                )
-            cap = max(capacity_per_bucket, len(toadd))
-            f = CuckooFilter(cap)
-            ok = f.bulk_insert(toadd["url_hash"].to_numpy(np.int64))
-            return pd.DataFrame(
-                {
-                    "bucket": [int(toadd["bucket"].iloc[0])],
-                    "capacity": [cap],
-                    "table": [f.to_bytes()],
-                    "overflowed": [not ok],
-                }
-            )
-        if len(toadd):
-            f = CuckooFilter.from_bytes(bytes(filters["table"].iloc[0]))
-            ok = f.bulk_insert(toadd["url_hash"].to_numpy(np.int64))
-            filters = filters.assign(
-                table=[f.to_bytes()],
-                overflowed=[bool(filters["overflowed"].iloc[0]) or not ok],
-            )
-        return filters
+    def add(stored: pd.DataFrame, hashes: np.ndarray) -> pd.DataFrame:
+        f = CuckooFilter.from_bytes(bytes(stored["table"].iloc[0]))
+        ok = f.bulk_insert(hashes)
+        return stored.assign(
+            table=[f.to_bytes()],
+            overflowed=[bool(stored["overflowed"].iloc[0]) or not ok],
+        )
 
-    return (
-        cuckoo.groupby("bucket")
-        .cogroup(adds.groupby("bucket"))
-        .applyInPandas(apply_ins, schema=CUCKOO_SCHEMA)
+    return _insert(
+        cuckoo, additions, n_buckets,
+        lambda b, h: _cuckoo_row(b, h, capacity_per_bucket), add, CUCKOO_SCHEMA,
     )
 
 
@@ -474,25 +463,23 @@ def cuckoo_delete(cuckoo: DataFrame, deletions: DataFrame,
     Cogrouped applyInPandas: each bucket's filter meets its deletions once;
     untouched buckets pass through.
     """
-    dels = with_bucket(deletions.select("url_hash"), n_buckets)
 
     def apply_del(filters: pd.DataFrame, todel: pd.DataFrame) -> pd.DataFrame:
-        if len(filters) == 0:
-            return pd.DataFrame(
-                columns=["bucket", "capacity", "table", "overflowed"]
-            )
-        if len(todel):
-            f = CuckooFilter.from_bytes(bytes(filters["table"].iloc[0]))
-            for h in todel["url_hash"]:
-                f.delete(int(h))
-            filters = filters.assign(table=[f.to_bytes()])
-        return filters
+        if len(filters) == 0 or len(todel) == 0:
+            return filters
+        f = CuckooFilter.from_bytes(bytes(filters["table"].iloc[0]))
+        for h in todel["url_hash"]:
+            f.delete(int(h))
+        return filters.assign(table=[f.to_bytes()])
 
-    return (
-        cuckoo.groupby("bucket")
-        .cogroup(dels.groupby("bucket"))
-        .applyInPandas(apply_del, schema=CUCKOO_SCHEMA)
-    )
+    return _cogroup_keys(cuckoo, deletions, n_buckets, apply_del, CUCKOO_SCHEMA)
+
+
+def _cuckoo_member(row: pd.DataFrame, hashes: np.ndarray) -> np.ndarray:
+    if bool(row["overflowed"].iloc[0]):
+        # filter is lossy for this bucket: exact-confirm everything
+        return np.ones(len(hashes), dtype=bool)
+    return CuckooFilter.from_bytes(bytes(row["table"].iloc[0])).contains(hashes)
 
 
 def seen_anti_join_cuckoo(
@@ -501,36 +488,78 @@ def seen_anti_join_cuckoo(
     cuckoo: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
-    """Cuckoo-prefiltered anti-join (cogrouped probe + exact confirm).
+    """Cuckoo-prefiltered anti-join, row-identical to :func:`seen_anti_join`
+    over the same live (non-deleted) seen set."""
+    return _probe(frontier, seen, cuckoo, n_buckets, _cuckoo_member)
 
-    Like the bloom path, the filter only shrinks the exact join's probe
-    side; false positives are exact-confirmed, so output is row-identical
-    to :func:`seen_anti_join` over the same live (non-deleted) seen set.
+
+# ---------------------------------------------------------------------------
+# One seen-filter mode behind one interface.
+
+
+class SeenFilter:
+    """The crawl's URL-seen prefilter for one mode: ``"exact"`` (no filter,
+    the exact anti-join alone), ``"bloom"`` or ``"cuckoo"``.
+
+    ``table`` names the committed per-bucket filter table (None for exact)
+    and ``filters`` holds its current rows: the caller reads them from
+    storage, or calls :meth:`build` on first use.  The object stays
+    storage-free — the caller stages or commits what :meth:`insert`,
+    :meth:`delete` and :meth:`rebuild` return.  A later expiring filter
+    (recrawl windows) would be one more kind behind the same methods.
+
+    The dedup functions are looked up in this module at CALL time, never
+    captured, so a swapped module attribute (a tracer, a test counter)
+    sees every call the engine makes.
     """
-    fb = with_bucket(frontier, n_buckets)
-    out_schema = fb.withColumn("_maybe", F.lit(True)).schema
-    out_cols = [f.name for f in out_schema.fields]
 
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=out_cols)
-        if len(right) == 0:
-            return left.assign(_maybe=False)[out_cols]
-        if bool(right["overflowed"].iloc[0]):
-            # filter is lossy for this bucket: exact-confirm everything
-            return left.assign(_maybe=True)[out_cols]
-        f = CuckooFilter.from_bytes(bytes(right["table"].iloc[0]))
-        hit = f.contains(left["url_hash"].to_numpy(np.int64))
-        return left.assign(_maybe=hit)[out_cols]
+    def __init__(
+        self,
+        kind: str,
+        n_buckets: int = DEFAULT_BUCKETS,
+        capacity_per_bucket: int = 10_000,
+    ):
+        if kind not in ("exact", "bloom", "cuckoo"):
+            raise ValueError(f"unknown seen-filter kind: {kind!r}")
+        self.table = None if kind == "exact" else kind
+        # only the cuckoo can delete; exact and bloom rely on the exact
+        # confirm against the live seen set
+        self.deletes = kind == "cuckoo"
+        self.n_buckets = n_buckets
+        self.capacity_per_bucket = capacity_per_bucket
+        self.filters: DataFrame | None = None
 
-    probed = (
-        fb.groupby("bucket")
-        .cogroup(cuckoo.groupby("bucket"))
-        .applyInPandas(probe, schema=out_schema)
-    )
-    definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe", "bucket")
-    maybe_seen = probed.filter(F.col("_maybe")).drop("_maybe", "bucket")
-    confirmed_new = maybe_seen.join(
-        seen.select("url_hash"), on="url_hash", how="left_anti"
-    )
-    return definitely_new.unionByName(confirmed_new)
+    def build(self, live_seen: DataFrame, per_bucket: int | None = None) -> DataFrame:
+        """Build the filter from scratch (first use: configured capacity)."""
+        build = build_bloom if self.table == "bloom" else build_cuckoo
+        self.filters = build(
+            live_seen, self.n_buckets, per_bucket or self.capacity_per_bucket
+        )
+        return self.filters
+
+    def rebuild(self, live_seen: DataFrame) -> DataFrame:
+        """Rebuild RESIZED to the grown seen set (periodic compaction), so
+        bloom fpp and cuckoo load factor stay at design level over a long
+        crawl and overflowed cuckoo buckets recover; between rebuilds
+        inserts keep each bucket's size fixed."""
+        per_bucket = max(
+            self.capacity_per_bucket,
+            int(live_seen.count() * 1.25) // max(self.n_buckets, 1) + 1,
+        )
+        return self.build(live_seen, per_bucket)
+
+    def probe(self, df: DataFrame, seen: DataFrame) -> DataFrame:
+        """``df`` minus ``seen``, row-identical to :func:`seen_anti_join`."""
+        if self.table is None:
+            return seen_anti_join(df, seen)
+        probe = seen_anti_join_bloom if self.table == "bloom" else seen_anti_join_cuckoo
+        return probe(df, seen, self.filters, self.n_buckets)
+
+    def insert(self, delta: DataFrame) -> DataFrame:
+        """The next committed table: ``filters`` plus the hashes of ``delta``."""
+        insert = bloom_insert if self.table == "bloom" else cuckoo_insert
+        return insert(self.filters, delta, self.n_buckets, self.capacity_per_bucket)
+
+    def delete(self, keys: DataFrame) -> DataFrame:
+        """The next committed table without ``keys`` (cuckoo only)."""
+        return cuckoo_delete(self.filters, keys, self.n_buckets)

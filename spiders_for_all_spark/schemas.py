@@ -125,8 +125,9 @@ MEDIA_META = T.StructType(
 )
 
 # Persisted per-bucket bloom bitmaps over the seen set, maintained
-# INCREMENTALLY (OR-merge of the round's delta bloom — O(delta)/round) and
-# rebuilt+resized at compaction.  Committed in the same atomic flip as
+# INCREMENTALLY (cogrouped insert of the round's seen delta, each bucket
+# keeping its stored size — O(delta)/round) and rebuilt+resized at
+# compaction.  Committed in the same atomic flip as
 # seen, so the filter can never lag or lead the set it summarizes.
 BLOOM = T.StructType(
     [

@@ -60,18 +60,30 @@ def test_list_schema_sf_dir(capsys):
     assert "struct<" in out
 
 
-def test_crawl_synthetic_and_warehouse_schema(capsys, tmp_path):
+@pytest.mark.parametrize(
+    "flags", [[], ["--bloom"], ["--cuckoo"]], ids=["exact", "bloom", "cuckoo"]
+)
+def test_crawl_synthetic_and_warehouse_schema(capsys, tmp_path, flags):
+    from spiders_for_all_spark.simulator import simulate
+
     wh = str(tmp_path / "wh")
     assert main([
-        "crawl", "--synthetic", "--rounds", "4", "--warehouse", wh,
+        "crawl", "--synthetic", "--rounds", "4", "--warehouse", wh, *flags,
     ]) == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["documents"] > 0
     assert summary["rounds"] >= 1
+    # every seen-filter mode fetches what the reference-semantics model
+    # fetches for the same synthetic site, budget and round limit
+    rows, seeds = FX.build_site(n_hosts=4, pages_per_chain=3, seed=42)
+    sim = simulate(FX.site_index(rows), seeds, max_rounds=4, default_budget=2)
+    assert summary["fetched"] == len(sim.visits)
 
     assert main(["list-schema", "--warehouse", wh]) == 0
     out = capsys.readouterr().out
     assert "documents" in out and "fetch_log" in out and "snap=" in out
+    tables = {line.split()[0] for line in out.splitlines() if " snap=" in line}
+    assert {"bloom", "cuckoo"} & tables == {f[2:] for f in flags}
 
 
 def test_download_by_sql_streams_to_file_sink(spark, tmp_path):

@@ -82,7 +82,15 @@ def world(tmp_path_factory):
     }
 
 
-def run_engine(spark, world, tmp, *, budget, use_bloom=False, bloom_partitioned=False,
+# seen-filter modes as CrawlConfig flags
+MODES = {
+    "exact": {},
+    "bloom": {"use_bloom": True},
+    "cuckoo": {"use_cuckoo": True},
+}
+
+
+def run_engine(spark, world, tmp, *, budget, use_bloom=False,
                salt_n=1, max_attempts=3, use_cuckoo=False):
     storage = SnapshotStorage(spark, str(tmp))
     cfg = CrawlConfig(
@@ -91,18 +99,30 @@ def run_engine(spark, world, tmp, *, budget, use_bloom=False, bloom_partitioned=
         max_attempts=max_attempts,
         max_depth=3,
         use_bloom=use_bloom,
-        bloom_partitioned=bloom_partitioned,
         use_cuckoo=use_cuckoo,
         salt_n=salt_n,
         n_buckets=8,
-        bloom_expected_per_bucket=64,
-        cuckoo_capacity_per_bucket=64,
+        filter_capacity_per_bucket=64,
     )
     crawler = Crawler(
         spark, storage, SyntheticFetcher(world["site_path"], partitions=4), cfg
     )
     stats = crawler.run(seeds=world["seeds"])
     return storage, stats
+
+
+@pytest.fixture(scope="module")
+def exact_ref(spark, world, tmp_path_factory):
+    """The exact-mode budget-2 crawl, shared by every test that compares a
+    variant against it."""
+    storage, _ = run_engine(
+        spark, world, tmp_path_factory.mktemp("exact_ref"), budget=2
+    )
+    return storage
+
+
+def visits(storage):
+    return sorted((r["round"], r["url"]) for r in storage.read("fetch_log").collect())
 
 
 def spans_tuplify(spans):
@@ -168,35 +188,17 @@ def test_crawl_matches_simulator(spark, world, tmp_path, budget):
     assert_engine_matches_sim(spark, storage, sim)
 
 
-def test_crawl_bloom_path_identical(spark, world, tmp_path):
-    """Bloom prefilter + exact confirm must not change any outcome — both
-    the broadcast-bitmap path and the cogrouped partition-wise path."""
-    s1, _ = run_engine(spark, world, tmp_path / "exact", budget=2)
-    s2, _ = run_engine(spark, world, tmp_path / "bloom", budget=2, use_bloom=True)
-    s3, _ = run_engine(
-        spark, world, tmp_path / "bloomp", budget=2,
-        use_bloom=True, bloom_partitioned=True,
-    )
-    d1 = sorted(
-        (r["round"], r["url"]) for r in s1.read("fetch_log").collect()
-    )
-    d2 = sorted(
-        (r["round"], r["url"]) for r in s2.read("fetch_log").collect()
-    )
-    d3 = sorted(
-        (r["round"], r["url"]) for r in s3.read("fetch_log").collect()
-    )
-    assert d1 == d2
-    assert d1 == d3
+def test_crawl_bloom_path_identical(spark, world, tmp_path, exact_ref):
+    """The partition-wise bloom prefilter + exact confirm must not change
+    any outcome."""
+    storage, _ = run_engine(spark, world, tmp_path / "bloom", budget=2, use_bloom=True)
+    assert visits(storage) == visits(exact_ref)
 
 
-def test_crawl_salted_scheduling_identical(spark, world, tmp_path):
+def test_crawl_salted_scheduling_identical(spark, world, tmp_path, exact_ref):
     """Two-phase salted scheduling must pick the identical fetch set."""
-    s1, _ = run_engine(spark, world, tmp_path / "nosalt", budget=2)
-    s2, _ = run_engine(spark, world, tmp_path / "salt", budget=2, salt_n=4)
-    d1 = sorted((r["round"], r["url"]) for r in s1.read("fetch_log").collect())
-    d2 = sorted((r["round"], r["url"]) for r in s2.read("fetch_log").collect())
-    assert d1 == d2
+    storage, _ = run_engine(spark, world, tmp_path / "salt", budget=2, salt_n=4)
+    assert visits(storage) == visits(exact_ref)
 
 
 def test_per_chain_fifo_order(spark, world, tmp_path):
@@ -248,32 +250,27 @@ def test_media_backup_failover(spark, world, tmp_path):
         assert r["n_chunks"] == math.ceil(max(r["bytes_fetched"], 1) / 16), r
 
 
-def test_crawl_cuckoo_path_identical(spark, world, tmp_path):
+def test_crawl_cuckoo_path_identical(spark, world, tmp_path, exact_ref):
     """J1 via the deletable cuckoo prefilter is fetch-for-fetch identical to
     the exact anti-join (the filter only widens the exact-confirm set)."""
-    ref_storage, _ = run_engine(spark, world, tmp_path / "exact_ck", budget=2)
     storage, _ = run_engine(spark, world, tmp_path / "cuckoo", budget=2,
                             use_cuckoo=True)
-    a = sorted((r["round"], r["url"]) for r in storage.read("fetch_log").collect())
-    b = sorted((r["round"], r["url"]) for r in ref_storage.read("fetch_log").collect())
-    assert a == b
+    assert visits(storage) == visits(exact_ref)
 
 
-def test_balanced_fetch_partitioning_identical(spark, world, tmp_path):
+def test_balanced_fetch_partitioning_identical(spark, world, tmp_path, exact_ref):
     """colocate_hosts=False round-robins the fetch stage (even task sizes
     under hot-host skew) — a correctness-free choice because the politeness
     budget is enforced upstream: the crawl must be fetch-for-fetch and
     span-for-span identical to the host-colocated default."""
-    ref_storage, _ = run_engine(spark, world, tmp_path / "colo", budget=2)
+    ref_storage = exact_ref
     storage = SnapshotStorage(spark, str(tmp_path / "balanced"))
     cfg = CrawlConfig(max_rounds=40, default_budget=2, max_depth=3, n_buckets=8)
     fetcher = SyntheticFetcher(
         world["site_path"], partitions=4, colocate_hosts=False
     )
     Crawler(spark, storage, fetcher, cfg).run(seeds=world["seeds"])
-    a = sorted((r["round"], r["url"]) for r in storage.read("fetch_log").collect())
-    b = sorted((r["round"], r["url"]) for r in ref_storage.read("fetch_log").collect())
-    assert a == b
+    assert visits(storage) == visits(ref_storage)
     docs_a = {
         r["doc_id"]: spans_tuplify(r["spans"])
         for r in storage.read("documents").collect()
@@ -285,52 +282,66 @@ def test_balanced_fetch_partitioning_identical(spark, world, tmp_path):
     assert docs_a == docs_b
 
 
-def test_cuckoo_incremental_no_full_rebuild(spark, world, tmp_path, monkeypatch):
-    """Steady-state cuckoo rounds must NOT rebuild the filter from the full
-    seen set: build_cuckoo runs at most once (the bootstrap, before any
-    'cuckoo' table exists); every later round reads the committed filter
-    and bulk-inserts only the round's seen delta (O(delta)/round)."""
+@pytest.mark.parametrize("table", ["bloom", "cuckoo"])
+def test_cuckoo_incremental_no_full_rebuild(spark, world, tmp_path, monkeypatch, table):
+    """Steady-state filter rounds must NOT rebuild the filter from the full
+    seen set: the build runs exactly once (first use, before any filter
+    table exists); every later round reads the committed filter and
+    inserts only the round's seen delta (O(delta)/round).  Exactly one
+    counted call also proves the engine calls build_bloom / build_cuckoo
+    through the dedup module at call time."""
     from spiders_for_all_spark import engine as ENG
 
     calls: list[int] = []
-    orig = ENG.D.build_cuckoo
+    orig = getattr(ENG.D, f"build_{table}")
 
     def counting(*a, **k):
         calls.append(1)
         return orig(*a, **k)
 
-    monkeypatch.setattr(ENG.D, "build_cuckoo", counting)
+    monkeypatch.setattr(ENG.D, f"build_{table}", counting)
     storage, stats = run_engine(
-        spark, world, tmp_path / "cuckoo_inc", budget=2, use_cuckoo=True
+        spark, world, tmp_path / f"{table}_inc", budget=2, **MODES[table]
     )
     assert len(stats.rounds) >= 3, "need a multi-round crawl to prove it"
-    assert len(calls) <= 1, f"full filter rebuild ran {len(calls)} times"
-    assert storage.latest_snapshot("cuckoo") is not None
+    assert len(calls) == 1, f"full filter build ran {len(calls)} times"
+    assert storage.latest_snapshot(table) is not None
 
 
-def test_cuckoo_with_compaction_identical(spark, world, tmp_path):
+@pytest.mark.parametrize("table", ["bloom", "cuckoo"])
+def test_cuckoo_with_compaction_identical(spark, world, tmp_path, exact_ref, table):
     """The periodic compaction rebuild (resize from the live seen set)
-    slots into a running cuckoo crawl without changing a single fetch, and
-    leaves no overflowed buckets."""
-    ref_storage, _ = run_engine(spark, world, tmp_path / "ckc_ref", budget=2)
-    storage = SnapshotStorage(spark, str(tmp_path / "ckc"))
+    slots into a running filter crawl without changing a single fetch.
+    The cuckoo is left with no overflowed buckets; the bloom is left with
+    grown bitmaps."""
+    from spiders_for_all_spark.operators.dedup import bloom_params
+
+    # the bloom starts at a tiny capacity in few buckets, so the resize
+    # (sized from the live seen count per bucket) must grow its bitmaps
+    n_buckets, capacity = (2, 4) if table == "bloom" else (8, 64)
+    storage = SnapshotStorage(spark, str(tmp_path / "compact"))
     cfg = CrawlConfig(
-        max_rounds=40, default_budget=2, max_depth=3, use_cuckoo=True,
-        n_buckets=8, cuckoo_capacity_per_bucket=64, compact_every=3,
+        max_rounds=40, default_budget=2, max_depth=3, **MODES[table],
+        n_buckets=n_buckets, filter_capacity_per_bucket=capacity, compact_every=3,
         expire_keep_last=2,
     )
     c = Crawler(
         spark, storage, SyntheticFetcher(world["site_path"], partitions=4), cfg
     )
     c.run(seeds=world["seeds"])
-    a = sorted((r["round"], r["url"]) for r in storage.read("fetch_log").collect())
-    b = sorted((r["round"], r["url"]) for r in ref_storage.read("fetch_log").collect())
-    assert a == b
-    ck = storage.read("cuckoo").collect()
-    assert ck and not any(r["overflowed"] for r in ck)
+    assert visits(storage) == visits(exact_ref)
+    rows = storage.read(table).collect()
+    assert rows
+    if table == "cuckoo":
+        assert not any(r["overflowed"] for r in rows)
+    else:
+        first_use_bits = bloom_params(capacity)[0]
+        assert all(r["n_bits"] > first_use_bits for r in rows), [
+            r["n_bits"] for r in rows
+        ]
 
 
-def test_evict_mid_crawl_preserves_pending(spark, world, tmp_path):
+def test_evict_mid_crawl_preserves_pending(spark, world, tmp_path, exact_ref):
     """evict() between rounds of a LIVE crawl (frontier non-empty, retries
     pending) must preserve every pending frontier row, and a crash between
     the evict commit and the next round must resume to the same final
@@ -338,17 +349,14 @@ def test_evict_mid_crawl_preserves_pending(spark, world, tmp_path):
     evicted URL)."""
     from collections import Counter
 
-    ref_storage, _ = run_engine(
-        spark, world, tmp_path / "evict_ref", budget=2, use_cuckoo=True
-    )
     ref_fetches = Counter(
-        r["url"] for r in ref_storage.read("fetch_log").collect()
+        r["url"] for r in exact_ref.read("fetch_log").collect()
     )
 
     storage = SnapshotStorage(spark, str(tmp_path / "evict_mid"))
     cfg = CrawlConfig(
         max_rounds=40, default_budget=2, max_depth=3, use_cuckoo=True,
-        n_buckets=8, cuckoo_capacity_per_bucket=64,
+        n_buckets=8, filter_capacity_per_bucket=64,
     )
     fetcher = SyntheticFetcher(world["site_path"], partitions=4)
     c = Crawler(spark, storage, fetcher, cfg)
@@ -385,15 +393,17 @@ def test_evict_mid_crawl_preserves_pending(spark, world, tmp_path):
     assert storage.read("evicted").count() == 0
 
 
-def test_evict_recrawls_url(spark, world, tmp_path):
+@pytest.mark.parametrize("mode", list(MODES))
+def test_evict_recrawls_url(spark, world, tmp_path, mode):
     """North-star re-crawl eviction: evict() logically deletes a fetched URL
-    from the seen set (cuckoo deletion + tombstone) and re-enqueues it; the
-    next round re-fetches it, refreshes update_at but keeps create_at, and
-    clears the tombstone."""
+    from the seen set (tombstone, plus a fingerprint deletion in cuckoo
+    mode; exact and bloom rely on the exact confirm) and re-enqueues it;
+    the next round re-fetches it, refreshes update_at but keeps create_at,
+    and clears the tombstone."""
     storage = SnapshotStorage(spark, str(tmp_path / "evict"))
     cfg = CrawlConfig(
-        max_rounds=40, default_budget=3, max_depth=3, use_cuckoo=True,
-        n_buckets=8, cuckoo_capacity_per_bucket=64,
+        max_rounds=40, default_budget=3, max_depth=3, **MODES[mode],
+        n_buckets=8, filter_capacity_per_bucket=64,
     )
     fetcher = SyntheticFetcher(world["site_path"], partitions=4)
     c = Crawler(spark, storage, fetcher, cfg)
@@ -472,7 +482,7 @@ def test_media_meta_table_and_sink(spark, world, tmp_path):
     ) or not os.listdir(os.path.join(storage.warehouse, "_scratch"))
 
 
-def test_resume_from_snapshot(spark, world, tmp_path):
+def test_resume_from_snapshot(spark, world, tmp_path, exact_ref):
     """Kill-and-resume: run 2 rounds, new Crawler resumes, result identical."""
     storage = SnapshotStorage(spark, str(tmp_path / "resume"))
     cfg = CrawlConfig(max_rounds=40, default_budget=2, max_attempts=3, max_depth=3)
@@ -484,10 +494,7 @@ def test_resume_from_snapshot(spark, world, tmp_path):
     c2 = Crawler(spark, storage, fetcher, cfg)
     c2.run()
 
-    ref_storage, _ = run_engine(spark, world, tmp_path / "ref", budget=2)
-    a = sorted((r["round"], r["url"]) for r in storage.read("fetch_log").collect())
-    b = sorted((r["round"], r["url"]) for r in ref_storage.read("fetch_log").collect())
-    assert a == b
+    assert visits(storage) == visits(exact_ref)
 
 
 def test_seen_frontier_row_stays_queued_not_dropped(spark, world, tmp_path):
@@ -520,7 +527,7 @@ def test_seen_frontier_row_stays_queued_not_dropped(spark, world, tmp_path):
 
     cfg = CrawlConfig(
         max_rounds=40, default_budget=2, max_depth=3, use_cuckoo=True,
-        n_buckets=8, cuckoo_capacity_per_bucket=64,
+        n_buckets=8, filter_capacity_per_bucket=64,
     )
     c = Crawler(
         spark, storage, SyntheticFetcher(world["site_path"], partitions=4), cfg

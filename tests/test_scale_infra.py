@@ -39,7 +39,7 @@ def test_bloom_partitioned_equals_exact(spark, hashes, frontier_like):
     bloom = D.build_bloom(hashes, n_buckets=8, expected_per_bucket=128)
     got = sorted(
         r["url"]
-        for r in D.seen_anti_join_bloom_partitioned(
+        for r in D.seen_anti_join_bloom(
             frontier_like, hashes, bloom, n_buckets=8
         ).collect()
     )
@@ -144,26 +144,30 @@ def test_cuckoo_build_sizes_from_actual_rows(spark):
 
 
 def test_merge_blooms_equals_full_build(spark, hashes):
-    """bloom(A) | bloom(B) is bit-identical to bloom(A ∪ B) — the property
-    the engine's incremental O(delta)/round filter maintenance rests on."""
+    """bloom_insert(bloom(A), B) is bit-identical to bloom(A ∪ B) — the
+    property the engine's incremental O(delta)/round filter maintenance
+    rests on."""
+
+    def bitmaps(bloom):
+        return {
+            r["bucket"]: (r["n_bits"], r["n_hashes"], bytes(r["bits"]))
+            for r in bloom.collect()
+        }
+
     # split on sign, NOT parity: parity correlates with pmod(hash, 8), which
-    # would make the two blooms' buckets disjoint and never exercise the OR
+    # would make A's and B's buckets disjoint and never exercise the insert
+    # into a stored bitmap
     a = hashes.filter(F.col("url_hash") > 0)
     b = hashes.filter(F.col("url_hash") <= 0)
-    merged = {
-        r["bucket"]: bytes(r["bits"])
-        for r in D.merge_blooms(
-            D.build_bloom(a, 8, 64), D.build_bloom(b, 8, 64)
-        ).collect()
-    }
-    full = {
-        r["bucket"]: bytes(r["bits"]) for r in D.build_bloom(hashes, 8, 64).collect()
-    }
-    assert merged == full
+    full = bitmaps(D.build_bloom(hashes, 8, 64))
+    assert bitmaps(D.bloom_insert(D.build_bloom(a, 8, 64), b, 8, 64)) == full
 
-    # size mismatch must fail loudly, not silently corrupt the filter
-    with pytest.raises(Exception, match="(?s)size mismatch"):
-        D.merge_blooms(D.build_bloom(a, 8, 64), D.build_bloom(b, 8, 4096)).collect()
+    # a stored bucket keeps its own sizing, whatever the capacity passed
+    assert bitmaps(D.bloom_insert(D.build_bloom(a, 8, 64), b, 8, 4096)) == full
+
+    # fresh buckets (no stored bitmap yet) are sized from the capacity
+    empty = D.build_bloom(hashes.limit(0), 8)
+    assert bitmaps(D.bloom_insert(empty, hashes, 8, 64)) == full
 
 
 def test_media_sink_streams_to_files(spark, tmp_path):
