@@ -74,14 +74,6 @@ class CrawlConfig:
     # pinned ISO timestamp for create_at/update_at (deterministic tests);
     # None = wall clock (F.current_timestamp()), the production default
     pinned_now: str | None = None
-    # disable AQE for the duration of each round (set + restored around
-    # run_round): every partitioning in a round is explicit (politeness
-    # window hash(host), bucketed merges, balanced fetch), so AQE's
-    # per-stage materialize->re-optimize barriers buy nothing and cost
-    # width-independent driver time — measured 12-18% on the
-    # commit-inclusive round and ~0.6 s/round on the pipeline (PLANS.md
-    # "Fixed per-round cost").  None = leave the session setting alone.
-    round_aqe: bool | None = False
 
 
 @dataclass
@@ -235,11 +227,14 @@ class Crawler:
 
     # ------------------------------------------------------------------
     def run_round(self, round_no: int) -> RoundStats:
-        cfg = self.config
-        if cfg.round_aqe is None:
-            return self._run_round(round_no)
+        # AQE is off for the round (restored after): every partitioning in
+        # a round is explicit (politeness window hash(host), bucketed
+        # merges, balanced fetch), so AQE's per-stage materialize ->
+        # re-optimize barriers buy nothing and cost width-independent
+        # driver time — 12-18% on the commit-inclusive round (PLANS.md
+        # "Fixed per-round cost").
         prev = self.spark.conf.get("spark.sql.adaptive.enabled")
-        self.spark.conf.set("spark.sql.adaptive.enabled", str(cfg.round_aqe).lower())
+        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
             return self._run_round(round_no)
         finally:

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spiders_for_all_spark.functions.partitioning import fence
+
 
 def docs_from_parsed(parsed_ok: DataFrame) -> DataFrame:
     """Explode per-fetch doc arrays into the documents table, doc_id-unique.
@@ -72,17 +74,10 @@ def filter_spans(docs: DataFrame, kinds: list[str], spans_col: str = "spans") ->
         ),
     )
     # Determinism fence (the parse_stage docs pathology): exploding the
-    # rewritten array downstream makes the optimizer infer size()>0 and
-    # pushdown then inlines this whole filter+renumber chain into a
-    # Filter below the projection — the rewrite runs twice per row.  The
-    # tautological nondeterministic guard (spark_partition_id() >= 0 is
-    # always true and bounds-opaque to constant folding) pins such
-    # filters above the projection.  A bare when() (no otherwise/
-    # coalesce) passes the value through untouched — INCLUDING a null
-    # input array staying null — so nullability and null semantics are
-    # exactly the pre-fence transform's.
-    fenced = F.when(F.spark_partition_id() >= F.lit(0), renumbered)
-    return docs.withColumn(spans_col, fenced)
+    # rewritten array downstream makes the optimizer infer size()>0, and
+    # pushdown would inline this whole filter+renumber chain into a Filter
+    # below the projection — the rewrite would run twice per row.
+    return docs.withColumn(spans_col, fence(renumbered))
 
 
 def strip_media(docs: DataFrame, spans_col: str = "spans") -> DataFrame:

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spiders_for_all_spark.functions.partitioning import ensure_width, fence
 from spiders_for_all_spark.functions.text import token_count
 
 
@@ -45,23 +46,16 @@ def global_token_offsets(
     bucket = F.substring(key, 1, 2)  # hex prefix byte: 256 buckets
     # width guard: the per-row md5 draw + token_count dominate; a
     # single-file scan otherwise runs them on one task
-    from spiders_for_all_spark.functions.partitioning import ensure_width
-
     docs = ensure_width(docs, id_col)
-    # Determinism fence (the parse_stage/ivf_assign pathology): the
-    # broadcast join on _bucket makes the optimizer infer
-    # isnotnull(_bucket), and pushdown inlines the md5 draw into a Filter
-    # below this projection — an extra full-stream md5+substring pass
-    # that can never prune a scan (the key is computed).  The
-    # tautological nondeterministic guard pins it above the projection;
-    # values unchanged (spark_partition_id() >= 0 always holds, and the
-    # never-taken coalesce arm keeps _bucket non-nullable).
+    # Determinism fence (the parse_stage docs pathology): the broadcast
+    # join on _bucket makes the optimizer infer isnotnull(_bucket), and
+    # pushdown would inline the md5 draw into a Filter below this
+    # projection — an extra full-stream md5 pass.  A null id gives a null
+    # bucket, as without the fence: the inner join drops that row.
     toks = docs.select(
         F.col(id_col),
         key.alias("_key"),
-        F.coalesce(
-            F.when(F.spark_partition_id() >= F.lit(0), bucket), F.lit("")
-        ).alias("_bucket"),
+        fence(bucket).alias("_bucket"),
         token_count(F.col(text_col)).cast("bigint").alias("n_tok"),
     )
     in_bucket = Window.partitionBy("_bucket").orderBy("_key", id_col)

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from spiders_for_all_spark import schemas as S
+from spiders_for_all_spark.functions.partitioning import fence
 
 PAGE_PARAM_RE = re.compile(r"[?&]page=(\d+)")
 SIZE_PARAM_RE = re.compile(r"[?&]size=(\d+)")
@@ -550,25 +551,12 @@ def _build_parse_exprs(
         good & (kind == "media") & media_ref_col.isNotNull(), F.array(media_doc)
     ).otherwise(F.array().cast(T.ArrayType(DOC_FIELD)))
     # Determinism fence: any downstream explode(docs) gets an optimizer-
-    # inferred `Filter size(docs)>0 AND isnotnull(docs)` under its Generate,
-    # and predicate pushdown then substitutes the alias chain through BOTH
-    # parse projections — inlining a SECOND full from_json + span
-    # construction into the Filter (~1s per 1M rows; see
-    # plans/r06/crawl_round_docs_leg_plan.txt).  The tautological
-    # nondeterministic guard pins such filters ABOVE this projection, where
-    # they test the already-computed attribute instead, so the parse
-    # evaluates once.  spark_partition_id() >= 0 is always true (partition
-    # indices are nonnegative by contract) but, being nondeterministic and
-    # bounds-opaque, cannot be constant-folded or pushed through (rand()
-    # comparisons CAN: the optimizer folds them from rand's known [0,1)
-    # bounds).  coalesce keeps the column non-nullable.  Values are
-    # bit-identical — golden row-for-row suites cover it — and the engine
-    # round's scratch spill never sees the difference (its explode filter
-    # lands on a materialized scan column).
-    docs = F.coalesce(
-        F.when(F.spark_partition_id() >= F.lit(0), docs),
-        F.array().cast(T.ArrayType(DOC_FIELD)),
-    )
+    # inferred `Filter size(docs)>0 AND isnotnull(docs)` under its
+    # Generate, and pushdown would inline a SECOND full from_json + span
+    # construction into it (~1s per 1M rows; see
+    # plans/r06/crawl_round_docs_leg_plan.txt).  A null docs (transform
+    # over a missing item list) becomes an empty array: no docs.
+    docs = F.coalesce(fence(docs), F.array().cast(T.ArrayType(DOC_FIELD)))
 
     out_links = F.when(
         good & (kind == "page") & env_ok,

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spiders_for_all_spark.functions.partitioning import fence
 from spiders_for_all_spark.functions.vectors import (
     cosine_rounded,
     dot,
@@ -191,34 +192,21 @@ def ivf_assign(
             ]
         )
 
-    from spiders_for_all_spark.functions.vectors import norm
-
     best = F.array_max(let(norm(F.col(vec_col)), scored))
-    # Determinism fence (same pathology + fix as parse_stage's docs alias):
-    # downstream joins/groupBys on cid make the optimizer infer
-    # isnotnull(cid), and predicate pushdown substitutes the alias —
-    # inlining the FULL k-cosine argmax chain into a Filter below this
-    # projection, so every row pays the assignment twice (visible in the
-    # pre-fix plans/r06/dedup_semantic_incremental_mid_prefence.txt scan
-    # Conditions).  cid is computed, never a scan column, so no pushdown
-    # can ever prune I/O with it; the tautological nondeterministic guard
-    # (spark_partition_id() >= 0 is always true, bounds-opaque, can't be
-    # constant-folded like rand() comparisons) pins such filters above the
-    # projection where they test the attribute.  Values unchanged; the
-    # never-taken coalesce arm keeps cid non-nullable.
-    out = emb.withColumn(
-        "cid",
-        F.coalesce(
-            F.when(
-                F.spark_partition_id() >= F.lit(0),
-                (-best.getField("ncid")).cast("int"),
-            ),
-            F.lit(-1).cast("int"),
-        ),
+    # Determinism fence (the parse_stage docs pathology): a join/groupBy on
+    # cid makes the optimizer infer isnotnull(cid), and pushdown would
+    # inline the FULL k-cosine argmax chain into a Filter below this
+    # projection (plans/r06/dedup_semantic_incremental_mid_prefence.txt).
+    # The argmax struct is fenced once as an intermediate column, so cid
+    # and centroid_cos both read its attribute and the chain runs once per
+    # row.  best is never null (k >= 1 structs); coalesce only keeps cid
+    # declared non-nullable.
+    out = emb.withColumn("_best", fence(best)).withColumn(
+        "cid", F.coalesce((-F.col("_best.ncid")).cast("int"), F.lit(-1))
     )
     if with_cos:
-        out = out.withColumn("centroid_cos", best.getField("cos"))
-    return out
+        out = out.withColumn("centroid_cos", F.col("_best.cos"))
+    return out.drop("_best")
 
 
 def ivf_probe_lists(

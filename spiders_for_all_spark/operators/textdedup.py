@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spiders_for_all_spark.functions.partitioning import ensure_width
+from spiders_for_all_spark.functions.partitioning import ensure_width, fence
 from spiders_for_all_spark.functions.text import fingerprint, shingles
 from spiders_for_all_spark.functions.vectors import cosine_rounded, lsh_bucket
 
@@ -28,10 +28,12 @@ from spiders_for_all_spark.functions.vectors import cosine_rounded, lsh_bucket
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the lowest-id representative per identical normalized text."""
+    """Keep the lowest-id representative per identical normalized text.
+    ``fp`` is fenced: a downstream join on it would otherwise inline a
+    second normalize+md5 into an inferred ``isnotnull`` filter."""
     return (
         ensure_width(df, id_col)
-        .withColumn("fp", fingerprint(F.col(text_col)))
+        .withColumn("fp", fence(fingerprint(F.col(text_col))))
         .groupBy("fp")
         .agg(F.min(id_col).alias(id_col), F.count("*").alias("n_copies"))
     )

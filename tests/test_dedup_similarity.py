@@ -325,6 +325,22 @@ def test_ivf_materialized_prunes_partitions(spark, emb, tmp_path):
     }
     assert got == want and got
 
+    # assignment values: nearest centroid by cosine, ties -> lowest cid;
+    # with_cos adds the rounded cosine to it; cid stays non-nullable
+    two = spark.createDataFrame(
+        [(1, [0.9, 0.1]), (2, [0.1, 0.9]), (3, [0.7, 0.7])],
+        "vec_id int, embedding array<float>",
+    )
+    a = SIM.ivf_assign(two, [[1.0, 0.0], [0.0, 1.0]], with_cos=True)
+    assert a.columns == ["vec_id", "embedding", "cid", "centroid_cos"]
+    assert not a.schema["cid"].nullable
+    got = {r["vec_id"]: (r["cid"], r["centroid_cos"]) for r in a.collect()}
+    assert got == {
+        1: (0, pytest.approx(0.993884, abs=1e-6)),
+        2: (1, pytest.approx(0.993884, abs=1e-6)),
+        3: (0, pytest.approx(0.707107, abs=1e-6)),
+    }
+
 
 def test_topk_per_query_window(spark, emb):
     queries = spark.createDataFrame(
@@ -531,26 +547,3 @@ def test_pair_kernel_matches_interpreted_pair_scan(spark):
             ).collect()
         }
         assert got == expected, f"nb={nb}"
-
-
-def test_ivf_assign_fence_single_evaluation(spark):
-    """A join/groupBy on the computed cid makes the optimizer infer
-    isnotnull(cid); without the determinism fence, predicate pushdown
-    inlines the FULL k-cosine argmax chain into a Filter below the
-    assignment projection, so every row pays the assignment twice (the
-    r06 pathology — plans/r06/dedup_semantic_incremental_mid_prefence.txt).
-    Guard the plan shape and the assignment values."""
-    cents = [[1.0, 0.0], [0.0, 1.0]]
-    emb = spark.createDataFrame(
-        [(1, [0.9, 0.1]), (2, [0.1, 0.9]), (3, [0.7, 0.7])],
-        "vec_id int, embedding array<float>",
-    )
-    a = SIM.ivf_assign(emb, cents)
-    joined = a.join(a.select(F.col("cid").alias("cid2")).distinct(),
-                    F.col("cid") == F.col("cid2"))
-    plan = joined._jdf.queryExecution().optimizedPlan().toString()
-    for line in plan.splitlines():
-        if line.strip().startswith("Filter") or "+- Filter" in line:
-            assert "zip_with" not in line and "aggregate(" not in line, line[:300]
-    got = {r["vec_id"]: r["cid"] for r in a.collect()}
-    assert got == {1: 0, 2: 1, 3: 0}

