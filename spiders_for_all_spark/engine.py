@@ -4,9 +4,9 @@ Replaces the reference's ``run() = before(); save_items(get_items()); after``
 driver (reference: core/spider.py:245-248,295-327) with the round loop of
 SURVEY §3.1:
 
-    frontier -> anti-join seen (exact | bloom | deletable cuckoo, probed
-                partition-wise + exact-confirm; eviction tombstones
-                subtracted)
+    frontier -> anti-join seen (exact | bloom | deletable cuckoo: a Catalyst
+                probe joined on bucket + exact-confirm; eviction
+                tombstones subtracted)
              -> robots gate (broadcast join)
              -> politeness window top-k per host (per-host salting for
                 hot hosts only)
@@ -18,6 +18,8 @@ SURVEY §3.1:
              -> media_meta (payloads sniffed from sink files)
              -> successors/retries -> next frontier
              -> seen += fetched; fetch_log += lineage; filter insert delta
+                (cogrouped: with fetch and the media sniff, the round's
+                only Python stages)
              -> ONE atomic multi-table snapshot commit (resumable
                 checkpoint, north_rule); periodic compaction + expiry
 
@@ -233,12 +235,20 @@ class Crawler:
         # re-optimize barriers buy nothing and cost width-independent
         # driver time — 12-18% on the commit-inclusive round (PLANS.md
         # "Fixed per-round cost").
+        # The round's scratch spill is removed however the round ends, so a
+        # failed round leaves no spill behind.
         prev = self.spark.conf.get("spark.sql.adaptive.enabled")
         self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
             return self._run_round(round_no)
         finally:
             self.spark.conf.set("spark.sql.adaptive.enabled", prev)
+            shutil.rmtree(self._scratch_dir(round_no), ignore_errors=True)
+
+    def _scratch_dir(self, round_no: int) -> str:
+        return os.path.join(
+            self.storage.warehouse, "_scratch", f"round-{round_no:06d}"
+        )
 
     def _run_round(self, round_no: int) -> RoundStats:
         cfg = self.config
@@ -251,12 +261,15 @@ class Crawler:
         filt = self.seen_filter
         if filt.table is not None:
             if storage.latest_snapshot(filt.table) is None:
-                filt.build(seen)  # first use: nothing committed yet
-            else:
-                # the filter was committed with last round's seen delta
-                # (and evict() already removed tombstoned cuckoo
-                # fingerprints) — no O(|seen|) rebuild on the hot path
-                filt.filters = storage.read(filt.table)
+                # first use: commit a filter built from the committed seen
+                # set (consistent with round N-1, so no partial round
+                # shows), then read it back like every later round — the
+                # build never rides along into this round's jobs
+                storage.commit(filt.table, filt.build(seen))
+            # the filter was committed with last round's seen delta (and
+            # evict() already removed tombstoned cuckoo fingerprints) — no
+            # O(|seen|) rebuild on the hot path
+            filt.filters = storage.read(filt.table)
         candidates = filt.probe(frontier, seen)
 
         # 2. robots gate (broadcast) + 3. politeness priority queue.
@@ -281,9 +294,7 @@ class Crawler:
         from pyspark.sql import Observation
 
         parsed = P.parse_stage(self.fetcher.fetch(scheduled))
-        scratch = os.path.join(
-            storage.warehouse, "_scratch", f"round-{round_no:06d}"
-        )
+        scratch = self._scratch_dir(round_no)
         obs = Observation()
         parsed.drop("media_bytes").observe(
             obs,
@@ -478,7 +489,6 @@ class Crawler:
         with ThreadPoolExecutor(max_workers=len(stage_jobs)) as ex:
             staged = list(ex.map(lambda job: job(), stage_jobs))
         storage.commit_multi(staged)
-        shutil.rmtree(scratch, ignore_errors=True)
         # frontier is overwritten every round — expire superseded snapshots
         # now (pure os-level dir removal) instead of letting up to
         # compact_every full frontier copies pile up between maintenance

@@ -7,13 +7,17 @@ spiders/bilibili/downloader.py:295).  At 10^10 URLs the exact seen table is
 hash-bucketed by ``pmod(url_hash, n_buckets)`` and fronted by one filter
 per bucket (bloom bitmap or cuckoo table) built in an Arrow-batched
 ``applyInPandas`` aggregation (Spark's ``bloom_filter_agg`` is JVM-internal
-and not persistable, SURVEY §4.3.1).  Probes run partition-wise: the
-frontier is shuffled by bucket once and cogrouped with its bucket's filter
-row, so the filter table never passes through the driver (at 10^10 keys it
-is GBs).  Filter *pass* (possibly-seen) rows are always exact-confirmed
-before being dropped, so false positives can never lose a URL — the filter
-only shrinks the exact join's probe side.  Filters are maintained
-incrementally: a round's seen delta is inserted cogrouped, O(delta) work.
+and not persistable, SURVEY §4.3.1).  Probes are pure Catalyst: the
+frontier left-joins its bucket's filter row and a Column expression, bit-
+exact with the numpy filters, tests membership — no Python worker.  The
+planner broadcasts a small filter table; at 10^10 keys (GBs of filters)
+its size estimate forces a shuffle join on ``bucket``, so the table never
+passes through the driver.  Filter *pass* (possibly-seen) rows are always
+exact-confirmed before being dropped, so false positives can never lose a
+URL — the filter only shrinks the exact join's probe side.  Filters are
+maintained incrementally: a round's seen delta is inserted cogrouped,
+O(delta) work; build, insert and delete stay cogrouped ``applyInPandas``
+(the cuckoo kick path is sequential).
 :class:`SeenFilter` puts one mode (exact, bloom, cuckoo) behind one
 interface.
 """
@@ -26,7 +30,7 @@ from collections.abc import Callable
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 64
@@ -96,37 +100,32 @@ def _insert(
     return _cogroup_keys(filters, additions, n_buckets, apply_ins, schema)
 
 
+def _mark_maybe(fb: DataFrame, filters: DataFrame, member: Column) -> DataFrame:
+    """``fb`` (bucketed) plus ``_maybe``: ``member`` over each row's
+    ``url_hash`` and its bucket's filter row.  A bucket with no filter row
+    holds nothing seen, so its rows are definitely new."""
+    return fb.join(filters, on="bucket", how="left").select(
+        *fb.columns, F.coalesce(member, F.lit(False)).alias("_maybe")
+    )
+
+
 def _probe(
     frontier: DataFrame,
     seen: DataFrame,
     filters: DataFrame,
     n_buckets: int,
-    member: Callable,
+    member: Column,
 ) -> DataFrame:
-    """Filter-prefiltered anti-join: cogrouped probe + exact confirm.
+    """Filter-prefiltered anti-join: a Catalyst membership test + exact
+    confirm.
 
-    ``member(filter_row, hashes)`` marks possibly-seen hashes of one bucket.
-    Output is row-identical to :func:`seen_anti_join` over the same seen
-    set — the filter can only send extra rows to the exact confirm, never
-    skip one.
+    The frontier joins its bucket's filter row (broadcast while the filter
+    table is small, shuffled on ``bucket`` at scale); ``member`` marks
+    possibly-seen rows.  Output is row-identical to :func:`seen_anti_join`
+    over the same seen set — the filter can only send extra rows to the
+    exact confirm, never skip one.
     """
-    fb = with_bucket(frontier, n_buckets)
-    out_schema = fb.withColumn("_maybe", F.lit(True)).schema
-    out_cols = [f.name for f in out_schema.fields]
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=out_cols)
-        if len(right) == 0:
-            return left.assign(_maybe=False)[out_cols]
-        hit = member(right, left["url_hash"].to_numpy(np.int64))
-        return left.assign(_maybe=hit)[out_cols]
-
-    probed = (
-        fb.groupby("bucket")
-        .cogroup(filters.groupby("bucket"))
-        .applyInPandas(probe, schema=out_schema)
-    )
+    probed = _mark_maybe(with_bucket(frontier, n_buckets), filters, member)
     definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe", "bucket")
     maybe_seen = probed.filter(F.col("_maybe")).drop("_maybe", "bucket")
     confirmed_new = maybe_seen.join(
@@ -227,12 +226,20 @@ def bloom_insert(
     )
 
 
-def _bloom_member(row: pd.DataFrame, hashes: np.ndarray) -> np.ndarray:
-    n_bits = int(row["n_bits"].iloc[0])
-    n_hashes = int(row["n_hashes"].iloc[0])
-    bits = np.frombuffer(row["bits"].iloc[0], np.uint8)
-    pos = _positions(hashes, n_bits, n_hashes)
-    return ((bits[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0).all(axis=0)
+def _bloom_member() -> Column:
+    """:func:`_positions` + the bit test as a Column over ``url_hash`` and
+    the row's ``n_bits``/``n_hashes``/``bits``.  Exact in signed longs:
+    h1, h2 < 2^32 and i < 16, so h1 + i*h2 < 2^36; a row's ``n_hashes``
+    (at most 16) guards the unrolled terms.  One SQL text, so building it
+    costs one py4j call, not hundreds."""
+    h1 = "shiftrightunsigned(url_hash, 32)"
+    h2 = "((url_hash & 4294967295) | 1)"
+    terms = []
+    for i in range(16):
+        pos = f"(({h1} + {i} * {h2}) % n_bits)"
+        byte = f"int(conv(hex(substring(bits, int(shiftright({pos}, 3)) + 1, 1)), 16, 10))"
+        terms.append(f"(n_hashes <= {i} OR (shiftright({byte}, int({pos} & 7)) & 1) = 1)")
+    return F.expr(" AND ".join(terms))
 
 
 def seen_anti_join_bloom(
@@ -242,7 +249,7 @@ def seen_anti_join_bloom(
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
     """Bloom-prefiltered anti-join, row-identical to :func:`seen_anti_join`."""
-    return _probe(frontier, seen, bloom, n_buckets, _bloom_member)
+    return _probe(frontier, seen, bloom, n_buckets, _bloom_member())
 
 
 # ---------------------------------------------------------------------------
@@ -475,11 +482,24 @@ def cuckoo_delete(cuckoo: DataFrame, deletions: DataFrame,
     return _cogroup_keys(cuckoo, deletions, n_buckets, apply_del, CUCKOO_SCHEMA)
 
 
-def _cuckoo_member(row: pd.DataFrame, hashes: np.ndarray) -> np.ndarray:
-    if bool(row["overflowed"].iloc[0]):
-        # filter is lossy for this bucket: exact-confirm everything
-        return np.ones(len(hashes), dtype=bool)
-    return CuckooFilter.from_bytes(bytes(row["table"].iloc[0])).contains(hashes)
+def _cuckoo_member() -> Column:
+    """:meth:`CuckooFilter.contains` as a Column over ``url_hash`` and the
+    row's ``table``/``overflowed``.  The bucket count m is a power of two,
+    so numpy's ``uint64 % m`` is ``h & (m-1)`` in signed longs, and
+    fp*0x5BD1E995 < 2^47.  A slot is a little-endian uint16, compared as
+    its two bytes.  An overflowed bucket is lossy: every row is a maybe."""
+    mask = "(bigint(shiftright(length(table), 3)) - 1)"  # m - 1
+    top = "shiftrightunsigned(url_hash, 48)"
+    fp = f"if({top} = 0, 1L, {top})"  # 0 marks an empty slot
+    fp_le = f"unhex(lpad(hex(({fp} & 255) * 256 + shiftright({fp}, 8)), 4, '0'))"
+    i1 = f"(url_hash & {mask})"
+    i2 = f"(({i1} ^ ({fp} * {0x5BD1E995})) & {mask})"
+    slots = [
+        f"substring(table, int({i} * 8 + {2 * s + 1}), 2) = {fp_le}"
+        for i in (i1, i2)
+        for s in range(CuckooFilter.SLOTS)
+    ]
+    return F.expr(" OR ".join(["overflowed", *slots]))
 
 
 def seen_anti_join_cuckoo(
@@ -490,7 +510,7 @@ def seen_anti_join_cuckoo(
 ) -> DataFrame:
     """Cuckoo-prefiltered anti-join, row-identical to :func:`seen_anti_join`
     over the same live (non-deleted) seen set."""
-    return _probe(frontier, seen, cuckoo, n_buckets, _cuckoo_member)
+    return _probe(frontier, seen, cuckoo, n_buckets, _cuckoo_member())
 
 
 # ---------------------------------------------------------------------------

@@ -538,3 +538,62 @@ def test_seen_frontier_row_stays_queued_not_dropped(spark, world, tmp_path):
     assert storage.read("fetch_log").count() == n_log_before
     left = storage.read("frontier").collect()
     assert len(left) == 1 and left[0]["url"] == done_url
+
+
+class _FailingStage(SnapshotStorage):
+    """Storage whose ``stage_*`` call for ``fail_table`` writes its data
+    and then raises, like a staging job that dies before the flip."""
+
+    fail_table: str | None = None
+
+    def _stage(self, method, table, *args, **kwargs):
+        staged = getattr(super(), method)(table, *args, **kwargs)
+        if table == self.fail_table:
+            raise RuntimeError(f"injected staging fault: {table}")
+        return staged
+
+    def stage_merge(self, table, *args, **kwargs):
+        return self._stage("stage_merge", table, *args, **kwargs)
+
+    def stage_append(self, table, *args, **kwargs):
+        return self._stage("stage_append", table, *args, **kwargs)
+
+    def stage_overwrite(self, table, *args, **kwargs):
+        return self._stage("stage_overwrite", table, *args, **kwargs)
+
+
+@pytest.mark.parametrize("table", ["documents", "seen", "fetch_log", "frontier", "cuckoo"])
+def test_staging_fault_keeps_round_n_minus_1(spark, world, tmp_path, table):
+    """A staging job that raises in round N leaves every table at round
+    N-1 and no scratch spill behind; a resumed crawl over the same
+    warehouse equals the simulator."""
+    import os
+
+    storage = _FailingStage(spark, str(tmp_path / "fault"))
+    cfg = CrawlConfig(
+        max_rounds=40, default_budget=5, max_attempts=3, max_depth=3,
+        use_cuckoo=True, n_buckets=8, filter_capacity_per_bucket=64,
+    )
+    fetcher = SyntheticFetcher(world["site_path"], partitions=4)
+    Crawler(spark, storage, fetcher, cfg).run(seeds=world["seeds"], max_rounds=1)
+
+    def catalog():
+        return {t: storage.latest_snapshot(t) for t in storage.tables()}
+
+    before = catalog()
+    assert table in before
+
+    storage.fail_table = table
+    with pytest.raises(RuntimeError, match="injected staging fault"):
+        Crawler(spark, storage, fetcher, cfg).run(max_rounds=1)
+    assert catalog() == before
+    scratch = os.path.join(storage.warehouse, "_scratch")
+    assert not os.path.exists(scratch) or not os.listdir(scratch)
+
+    storage.fail_table = None
+    Crawler(spark, storage, fetcher, cfg).run()
+    sim = simulate(
+        world["index"], world["seeds"], max_rounds=40, default_budget=5,
+        max_attempts=3, max_depth=3,
+    )
+    assert_engine_matches_sim(spark, storage, sim)
