@@ -7,7 +7,9 @@ pipeline needs media *columns*: this module provides the Spark-side
 plumbing — schema, batch shape, partitioning — with the actual codec work
 stubbed (image/audio libraries are not in this container; see
 ``decode_image``).  The plumbing (magic sniffing, sizing, frame-offset
-computation) is real and tested.
+computation) is real and tested.  :func:`sniff_format` is the one magic
+sniffer: the crawl's fetch worker applies it to each payload it writes to
+the media sink, and :func:`sniff_media_meta` applies it to a binary column.
 """
 
 from __future__ import annotations
@@ -18,15 +20,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-MEDIA_META = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("format", T.StringType(), True),  # sniffed from magic bytes
-        T.StructField("kind", T.StringType(), True),  # image|video|audio|unknown
-    ]
-)
 
 _MAGIC = [
     (b"\xff\xd8\xff", "jpeg", "image"),
@@ -47,49 +40,12 @@ def sniff_format(payload: bytes | None) -> tuple[str | None, str | None]:
     return "bin", "unknown"
 
 
-def extract_media_meta(
-    df: DataFrame, ref_col: str = "media_ref", bin_col: str = "payload"
-) -> DataFrame:
-    """binary column -> typed metadata rows (vectorized, one pass)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            fmts, kinds, sizes = [], [], []
-            for payload in pdf[bin_col]:
-                b = bytes(payload) if payload is not None else None
-                fmt, kind = sniff_format(b)
-                fmts.append(fmt)
-                kinds.append(kind)
-                sizes.append(len(b) if b else 0)
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf[ref_col].astype(str),
-                    "n_bytes": pd.array(sizes, dtype="int64"),
-                    "format": fmts,
-                    "kind": kinds,
-                }
-            )
-
-    return df.mapInPandas(run, schema=MEDIA_META)
-
-
-def sniff_media_meta(
-    df: DataFrame,
-    ref_col: str = "media_ref",
-    bin_col: str | None = None,
-    path_col: str | None = None,
-) -> DataFrame:
-    """Append (n_bytes, format, kind) metadata columns to every input row.
-
-    The payload comes from a binary column (inline mode) or is read from
-    the media-sink file named by ``path_col`` INSIDE the Arrow worker
-    (sink mode — the at-scale path where bytes never travel through the
-    plan; reading sink files in the metadata pass is the object-store
-    HEAD/GET a production pipeline does).  Used by the engine to build the
-    ``media_meta`` round table (VERDICT r02 missing item 2).
-    """
+def sniff_media_meta(df: DataFrame, bin_col: str = "payload") -> DataFrame:
+    """Append (n_bytes, format, media_kind) metadata columns to every input
+    row, sniffed from the binary column ``bin_col`` in one Arrow pass
+    (n_bytes is null for a null or empty payload).  A crawl round does not
+    call this: its fetch worker sniffs each payload as it writes it to the
+    media sink (sources/fetcher.py)."""
     out_schema = T.StructType(
         list(df.schema.fields)
         + [
@@ -105,16 +61,8 @@ def sniff_media_meta(
             if len(pdf) == 0:
                 continue
             fmts, kinds, sizes = [], [], []
-            paths = pdf[path_col] if path_col and path_col in pdf else [None] * len(pdf)
-            bins = pdf[bin_col] if bin_col and bin_col in pdf else [None] * len(pdf)
-            for payload, path in zip(bins, paths):
+            for payload in pdf[bin_col]:
                 b = bytes(payload) if payload is not None else None
-                if b is None and path is not None:
-                    try:
-                        with open(path, "rb") as fh:
-                            b = fh.read()
-                    except OSError:
-                        b = None
                 fmt, kind = sniff_format(b)
                 fmts.append(fmt)
                 kinds.append(kind)

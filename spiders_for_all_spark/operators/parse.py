@@ -17,21 +17,19 @@ semantics —
     videos/audios (spiders/xhs/downloader.py:41-72,110-112;
     spiders/bilibili/downloader.py:195-226); ``offset`` = list position.
 
-The vectorized Spark wrapper :func:`parse_stage` applies it over Arrow
-batches via ``mapInPandas`` — batch-at-a-time Python, never a row-at-a-time
-Spark UDF.  The golden-test simulator calls :func:`parse_body` directly, so
-span-sequence equality between the distributed engine and the sequential
-reference semantics is checked end-to-end through shuffle/Arrow plumbing.
+The Spark stage :func:`parse_stage` implements the same semantics as pure
+Catalyst expressions (from_json, regexp_extract, array transforms) — no
+Python in the parse path.  The golden-test simulator calls
+:func:`parse_body` directly, so span-sequence equality between the
+distributed engine and the sequential reference semantics is checked
+end-to-end through the shuffle plumbing.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from collections.abc import Iterator
 from typing import Any
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -208,53 +206,9 @@ DOC_FIELD = T.StructType(
     ]
 )
 
-PARSE_FIELDS = [
-    T.StructField("code", T.IntegerType(), True),
-    T.StructField("page_title", T.StringType(), True),
-    T.StructField("success", T.BooleanType(), True),
-    T.StructField("docs", T.ArrayType(DOC_FIELD), True),
-    T.StructField("out_links", T.ArrayType(T.StringType()), True),
-    T.StructField("has_more", T.BooleanType(), True),
-    T.StructField("next_cursor", T.StringType(), True),
-    T.StructField("items_count", T.IntegerType(), True),
-    T.StructField("page_size", T.IntegerType(), True),
-    T.StructField("parse_error", T.StringType(), True),
-]
-
-
-def parsed_schema(input_schema: T.StructType) -> T.StructType:
-    drop = {f.name for f in PARSE_FIELDS}
-    base = [f for f in input_schema.fields if f.name not in drop and f.name != "body"]
-    return T.StructType(base + PARSE_FIELDS)
-
-
-def parse_stage_pandas(fetched: DataFrame) -> DataFrame:
-    """Arrow-batched pandas variant of the parse stage (kept for ablation
-    benchmarks; the default parse_stage below is pure Catalyst)."""
-    out_schema = parsed_schema(fetched.schema)
-    out_cols = [f.name for f in out_schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            parsed = [
-                parse_body(k, u, s, b)
-                for k, u, s, b in zip(
-                    pdf["kind"], pdf["url"], pdf["status"], pdf["body"]
-                )
-            ]
-            res = pdf.drop(columns=["body"]).reset_index(drop=True)
-            pp = pd.DataFrame(parsed)
-            for f in PARSE_FIELDS:
-                res[f.name] = pp[f.name]
-            yield res[out_cols]
-
-    return fetched.mapInPandas(run, schema=out_schema)
-
 
 # ---------------------------------------------------------------------------
-# Catalyst-native parse (the default): ZERO python in the parse path.
+# Catalyst-native parse: ZERO python in the parse path.
 #
 # from_json + regexp_extract + array transform expressions implement exactly
 # the semantics of parse_body above (which remains the executable spec the

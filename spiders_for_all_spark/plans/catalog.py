@@ -1198,13 +1198,18 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spiders_for_all_spark.operators.multimodal import extract_media_meta
+    from spiders_for_all_spark.operators.multimodal import sniff_media_meta
 
     d = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("media_ref"),
         F.encode(F.col("text"), "utf-8").alias("payload"),
     )
-    return extract_media_meta(d)
+    return sniff_media_meta(d).select(
+        "media_ref",
+        F.coalesce(F.col("n_bytes"), F.lit(0).cast("long")).alias("n_bytes"),
+        "format",
+        F.col("media_kind").alias("kind"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1432,10 +1437,9 @@ def robots_txt_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def media_meta_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The engine's media_meta builder (multimodal.sniff_media_meta) over
-    deterministic magic-byte payloads: jpeg/png/gif/mp4 prefixes + the doc
-    text as body, sniffed in one Arrow pass (inline-bytes mode; the engine
-    round uses the same function in sink-file mode)."""
+    """The media sniff (multimodal.sniff_media_meta, the same sniff_format
+    a crawl's fetch worker applies) over deterministic magic-byte payloads:
+    jpeg/png/gif/mp4 prefixes + the doc text as body, in one Arrow pass."""
     from spiders_for_all_spark.operators.multimodal import sniff_media_meta
 
     d = _t(spark, sf_dir, "documents")
@@ -1451,7 +1455,7 @@ def media_meta_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "payload"
         ),
     )
-    return sniff_media_meta(rows, bin_col="payload").select(
+    return sniff_media_meta(rows).select(
         "media_ref", "n_bytes", "format", "media_kind"
     )
 

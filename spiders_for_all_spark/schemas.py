@@ -109,9 +109,10 @@ FETCH_LOG = T.StructType(
     ]
 )
 
-# Typed metadata for every fetched media payload, built per round from the
-# sink files (or inline bytes) by multimodal.sniff_media_meta and committed
-# in the same atomic flip as documents/seen/fetch_log.
+# Typed metadata for every fetched media payload: the fetch worker sniffs
+# each payload as it writes it to the media sink (multimodal.sniff_format),
+# and the round selects these rows from its spill and commits them in the
+# same atomic flip as documents/seen/fetch_log.
 MEDIA_META = T.StructType(
     [
         T.StructField("url_hash", T.LongType(), False),

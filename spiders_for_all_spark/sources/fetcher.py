@@ -8,16 +8,22 @@ mode; a pooled ``requests.Session`` in HTTP mode — the Session-reuse analog
 of core/client.py:83), and fetches a whole batch per invocation.  No
 per-row Python UDFs, no executor sleeps.
 
-Fetchers are pluggable (SURVEY §4.3.4): tests and benches use
-:class:`SyntheticFetcher` (deterministic, closed-world); a real crawl would
-use :class:`HttpFetcher` (gated behind an import-try; not exercised in the
-sandbox).
+Fetchers are pluggable (SURVEY §4.3.4) and share ONE batch loop,
+:func:`fetch_batches`: a fetcher supplies only a per-worker reader,
+``read(url, attempt, media) -> (status, body or payload, error,
+latency_ms)``, and the loop owns backup failover, the media sink write,
+chunk accounting, the media sniff and the output columns.  Tests and
+benches use :class:`SyntheticFetcher` (deterministic, closed-world); a real
+crawl would use :class:`HttpFetcher` (gated behind an import-try; no
+network in the sandbox).  :class:`ProceduralFetcher` builds its bodies in
+one Arrow kernel and shares only the column fill and the partitioning.
 """
 
 from __future__ import annotations
 
 import functools
-from collections.abc import Iterator
+import os
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 
@@ -25,8 +31,8 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from spiders_for_all_spark import schemas as S
 from spiders_for_all_spark.fixtures import synthetic_response
+from spiders_for_all_spark.operators.multimodal import sniff_format
 
 FETCH_FIELDS = [
     T.StructField("status", T.IntegerType(), True),
@@ -37,17 +43,25 @@ FETCH_FIELDS = [
     # S6 media: failover winner + chunk-streamed payload accounting
     # (reference core/downloader.py:184-218, core/media.py:36-42)
     T.StructField("media_ref", T.StringType(), True),
-    T.StructField("media_bytes", T.BinaryType(), True),
     T.StructField("n_chunks", T.IntegerType(), True),
-    # set when the fetcher runs with a media sink: bytes were streamed to
-    # this file DURING the fetch (media_bytes stays null) — the scale path
-    # per SURVEY §2 S6 ("never materialize bytes in a column")
+    # the sink file the payload was written to DURING the fetch: only this
+    # path travels through the plan, never the bytes (SURVEY §2 S6)
     T.StructField("media_path", T.StringType(), True),
-    # explicit payload byte count, set in BOTH inline and sink modes —
-    # fetch_log lineage must not lose byte accounting exactly on the
-    # at-scale sink path (ADVICE r02)
     T.StructField("bytes_fetched", T.LongType(), True),
+    # sniffed from the payload's magic bytes while the worker holds it
+    # (multimodal.sniff_format) — media_meta is a select over these
+    T.StructField("media_format", T.StringType(), True),
+    T.StructField("media_kind", T.StringType(), True),
 ]
+
+# what a reader returns for one request: (status, body text for a page or
+# payload bytes for media, error, latency_ms)
+ReadResult = tuple[int | None, str | bytes | None, str | None, int]
+Reader = Callable[[str, int, bool], ReadResult]
+
+DEFAULT_CHUNK_SIZE = 16  # bytes, test-scale stand-in for the 10MB/1MB
+# CHUNK_SIZE constants (reference const.py:1, spiders/bilibili/const.py:10)
+HTTP_CHUNK_SIZE = 10 * 1024 * 1024  # reference const.py:1 CHUNK_SIZE
 
 
 def media_filename(url: str) -> str:
@@ -61,38 +75,87 @@ def media_filename(url: str) -> str:
     base = _re.sub(r'[\\/:*?"<>|]', "_", base)[:80]
     return f"{hashlib.md5(url.encode()).hexdigest()[:10]}_{base}"
 
-DEFAULT_CHUNK_SIZE = 16  # bytes, test-scale stand-in for the 10MB/1MB
-# CHUNK_SIZE constants (reference const.py:1, spiders/bilibili/const.py:10)
-
-
-def _fetch_media_chunked(
-    read_candidate, candidates: list[str], attempt: int, chunk_size: int
-) -> tuple[int | None, str | None, str | None, bytes | None, int | None]:
-    """Ordered failover + chunked streaming, shared by all fetchers.
-
-    Tries each candidate URL in order within ONE attempt; on the first
-    HTTP-200, streams its payload in ``chunk_size`` slices (the reference's
-    iter_content loop).  Returns (status, error, media_ref, media_bytes,
-    n_chunks) — status/error reflect the LAST candidate tried on total
-    failure, so retry classification matches the single-URL path.
-    """
-    status, err = None, None
-    for cu in candidates:
-        status, payload, err = read_candidate(cu, attempt)
-        if status == 200:
-            chunks = [
-                payload[i : i + chunk_size]
-                for i in range(0, max(len(payload), 1), chunk_size)
-            ]
-            return status, err, cu, b"".join(chunks), len(chunks)
-    return status, err, None, None, None
-
 
 def fetched_schema(input_schema: T.StructType) -> T.StructType:
     names = {f.name for f in FETCH_FIELDS}
     return T.StructType(
         [f for f in input_schema.fields if f.name not in names] + FETCH_FIELDS
     )
+
+
+def with_fetch_columns(pdf: pd.DataFrame, out_cols: list[str], **cols) -> pd.DataFrame:
+    """``pdf`` plus every fetch column, in ``out_cols`` order: each given
+    column is a list as long as ``pdf``, the rest are null."""
+    ctx = TaskContext.get()
+    none = [None] * len(pdf)
+    return pdf.assign(
+        status=pd.array(cols.get("status", none), dtype="Int32"),
+        body=pd.array(cols.get("body", none), dtype="object"),
+        latency_ms=pd.array(cols.get("latency_ms", none), dtype="Int32"),
+        error=pd.array(cols.get("error", none), dtype="object"),
+        partition_id=ctx.partitionId() if ctx else -1,
+        media_ref=pd.array(cols.get("media_ref", none), dtype="object"),
+        n_chunks=pd.array(cols.get("n_chunks", none), dtype="Int32"),
+        media_path=pd.array(cols.get("media_path", none), dtype="object"),
+        bytes_fetched=pd.array(cols.get("bytes_fetched", none), dtype="Int64"),
+        media_format=pd.array(cols.get("media_format", none), dtype="object"),
+        media_kind=pd.array(cols.get("media_kind", none), dtype="object"),
+    )[out_cols]
+
+
+def fetch_batches(
+    batches: Iterable[pd.DataFrame],
+    read: Reader,
+    sink_dir: str,
+    chunk_size: int,
+    out_cols: list[str],
+) -> Iterator[pd.DataFrame]:
+    """The fetch loop every reader-based fetcher shares.
+
+    A page row is one ``read``.  A media row tries ``[url] + backup_urls``
+    in order within ONE attempt; the first HTTP-200 payload is written once
+    to ``sink_dir``, counted (``n_chunks`` = the ``chunk_size`` slices a
+    streamed download takes, at least one) and sniffed.  Status, error and
+    latency are those of the read that decided the row — the winner, or
+    the last candidate on total failure, so retry classification matches
+    the single-URL path.
+    """
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        n = len(pdf)
+        status, body, lat, err = [], [], [], []
+        mref, nch, mpath, nbytes, mfmt, mkind = ([None] * n for _ in range(6))
+        backups = pdf["backup_urls"] if "backup_urls" in pdf.columns else [None] * n
+        for i, (url, attempt, kind, backup) in enumerate(
+            zip(pdf["url"], pdf["attempt"], pdf["kind"], backups)
+        ):
+            media = kind == "media"
+            for cand in [url] + (list(backup) if media and backup is not None else []):
+                st, payload, e, ms = read(cand, int(attempt), media)
+                if st == 200:
+                    break
+            status.append(st)
+            err.append(e)
+            lat.append(ms)
+            if not media:
+                body.append(payload)
+                continue
+            body.append(None)
+            if st != 200:
+                continue
+            os.makedirs(sink_dir, exist_ok=True)
+            path = os.path.join(sink_dir, media_filename(url))
+            with open(path, "wb") as fh:
+                fh.write(payload)
+            mref[i], mpath[i], nbytes[i] = cand, path, len(payload)
+            nch[i] = -(-max(len(payload), 1) // chunk_size)
+            mfmt[i], mkind[i] = sniff_format(payload)
+        yield with_fetch_columns(
+            pdf, out_cols, status=status, body=body, latency_ms=lat, error=err,
+            media_ref=mref, n_chunks=nch, media_path=mpath, bytes_fetched=nbytes,
+            media_format=mfmt, media_kind=mkind,
+        )
 
 
 @functools.lru_cache(maxsize=4)
@@ -135,6 +198,47 @@ def partition_for_fetch(
     return scheduled.repartition(partitions, F.xxhash64("url_hash"))
 
 
+def reader_fetch(
+    scheduled: DataFrame,
+    open_reader: Callable[[], Reader],
+    fetcher,
+    chunk_size: int,
+) -> DataFrame:
+    """The fetch stage of a reader-based fetcher: ``open_reader`` is called
+    once per Python worker task and its reader feeds :func:`fetch_batches`.
+    It is pickled without the fetcher object, whose methods a caller may
+    have wrapped."""
+    sink_dir = fetcher.media_sink_dir
+    if sink_dir is None:
+        raise ValueError(
+            f"{type(fetcher).__name__} needs media_sink_dir: media payloads "
+            "are written to that directory, never carried in a column"
+        )
+    out_schema = fetched_schema(scheduled.schema)
+    out_cols = [f.name for f in out_schema.fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        yield from fetch_batches(batches, open_reader(), sink_dir, chunk_size, out_cols)
+
+    scheduled = partition_for_fetch(
+        scheduled, fetcher.partitions, fetcher.colocate_hosts
+    )
+    return scheduled.mapInPandas(run, schema=out_schema)
+
+
+def _synthetic_reader(site_path: str) -> Reader:
+    site = _load_site(site_path)
+
+    def read(url: str, attempt: int, media: bool) -> ReadResult:
+        page = site.get(url)
+        status, body, err = synthetic_response(page, attempt)
+        if media:
+            body = (body or "").encode("utf-8")
+        return status, body, err, int(page["latency_ms"]) if page else 0
+
+    return read
+
+
 class SyntheticFetcher:
     """Deterministic fetcher over a parquet 'site' (FIXTURES.md §2).
 
@@ -144,109 +248,22 @@ class SyntheticFetcher:
     """
 
     def __init__(self, site_path: str, partitions: int | None = None,
-                 chunk_size: int = DEFAULT_CHUNK_SIZE,
                  media_sink_dir: str | None = None,
                  colocate_hosts: bool = True):
-        """``media_sink_dir``: when set, media payloads are chunk-streamed
-        to files in that directory INSIDE the fetch worker (K3-style file
-        sink; the object-store path at scale) and ``media_bytes`` stays
-        null — only the reference travels through the plan."""
+        """``media_sink_dir``: the directory media payloads are written to
+        INSIDE the fetch worker (K3-style file sink; the object-store path
+        at scale).  The engine defaults it to the warehouse sink; a direct
+        ``fetch`` without one raises."""
         self.site_path = site_path
         self.partitions = partitions
-        self.chunk_size = chunk_size
         self.media_sink_dir = media_sink_dir
         self.colocate_hosts = colocate_hosts
 
     def fetch(self, scheduled: DataFrame) -> DataFrame:
-        out_schema = fetched_schema(scheduled.schema)
-        out_cols = [f.name for f in out_schema.fields]
-        site_path = self.site_path
-        chunk_size = self.chunk_size
-        sink_dir = self.media_sink_dir
-        has_backups = "backup_urls" in scheduled.columns
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            site = _load_site(site_path)
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx else -1
-
-            def read_candidate(u: str, attempt: int):
-                page = site.get(u)
-                status, body, err = synthetic_response(page, attempt)
-                return status, (body or "").encode("utf-8"), err
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                statuses, bodies, lats, errs = [], [], [], []
-                mrefs, mbytes, mchunks, mpaths, nbytes = [], [], [], [], []
-                backups = (
-                    pdf["backup_urls"] if has_backups else [None] * len(pdf)
-                )
-                for url, attempt, kind, backup in zip(
-                    pdf["url"], pdf["attempt"], pdf["kind"], backups
-                ):
-                    page = site.get(url)
-                    if kind == "media":
-                        cands = [url] + (list(backup) if backup is not None else [])
-                        status, err, mref, mb, nch = _fetch_media_chunked(
-                            read_candidate, cands, int(attempt), chunk_size
-                        )
-                        nbytes.append(len(mb) if mb is not None else None)
-                        path = None
-                        if sink_dir is not None and mb is not None:
-                            # stream to the file sink inside the worker;
-                            # only the path travels through the plan
-                            import os
-
-                            os.makedirs(sink_dir, exist_ok=True)
-                            path = os.path.join(sink_dir, media_filename(url))
-                            with open(path, "wb") as fh:
-                                for i in range(0, len(mb), chunk_size):
-                                    fh.write(mb[i : i + chunk_size])
-                            mb = None
-                        statuses.append(status)
-                        bodies.append(None)
-                        mrefs.append(mref)
-                        mbytes.append(mb)
-                        mchunks.append(nch)
-                        mpaths.append(path)
-                        win = site.get(mref) if mref else page
-                        lats.append(int(win["latency_ms"]) if win else 0)
-                        errs.append(err)
-                        continue
-                    status, body, err = synthetic_response(page, int(attempt))
-                    statuses.append(status)
-                    bodies.append(body)
-                    lats.append(int(page["latency_ms"]) if page else 0)
-                    errs.append(err)
-                    mrefs.append(None)
-                    mbytes.append(None)
-                    mchunks.append(None)
-                    mpaths.append(None)
-                    nbytes.append(None)
-                yield pdf.assign(
-                    status=pd.array(statuses, dtype="int32"),
-                    body=pd.array(bodies, dtype="object"),
-                    latency_ms=pd.array(lats, dtype="int32"),
-                    error=pd.array(errs, dtype="object"),
-                    partition_id=pid,
-                    media_ref=pd.array(mrefs, dtype="object"),
-                    media_bytes=pd.array(mbytes, dtype="object"),
-                    n_chunks=pd.array(mchunks, dtype="Int32"),
-                    media_path=pd.array(mpaths, dtype="object"),
-                    bytes_fetched=pd.array(nbytes, dtype="Int64"),
-                )[out_cols]
-
-        # co-locate a host's URLs in one task (politeness accounting stays
-        # local, per-host connections are reused).  partitions=None trusts
-        # the upstream partitioning — the politeness window already
-        # hash-partitioned by host, so adding a repartition here would be a
-        # pure extra shuffle.
-        scheduled = partition_for_fetch(
-            scheduled, self.partitions, self.colocate_hosts
+        return reader_fetch(
+            scheduled, functools.partial(_synthetic_reader, self.site_path),
+            self, DEFAULT_CHUNK_SIZE,
         )
-        return scheduled.mapInPandas(run, schema=out_schema)
 
 
 def _http_request_kwargs(
@@ -270,8 +287,47 @@ def _install_cookies(session, cookies: dict | None) -> None:
         session.cookies.update(cookies)
 
 
+def _http_reader(
+    timeout_s: float,
+    user_agents: list[str],
+    proxies: dict | None,
+    cookies: dict | None,
+    session=None,
+) -> Reader:
+    """Per-worker HTTP reader over one pooled Session (a fresh
+    ``requests.Session`` unless one is given).  Pages read ``resp.text``,
+    media stream their bytes; the User-Agent rotates once per request."""
+    import itertools
+    import time
+
+    import requests
+
+    if session is None:
+        session = requests.Session()
+    _install_cookies(session, cookies)
+    uas = itertools.cycle(user_agents)
+
+    def read(url: str, attempt: int, media: bool) -> ReadResult:
+        t0 = time.monotonic()
+        try:
+            resp = session.get(
+                url, stream=media,
+                **_http_request_kwargs(next(uas), timeout_s, proxies),
+            )
+            if media:
+                body = b"".join(resp.iter_content(chunk_size=HTTP_CHUNK_SIZE))
+            else:
+                body = resp.text
+            status, err = resp.status_code, None
+        except requests.RequestException as exc:
+            status, body, err = None, None, f"{type(exc).__name__}: {exc}"
+        return status, body, err, int((time.monotonic() - t0) * 1000)
+
+    return read
+
+
 class HttpFetcher:
-    """Real-HTTP fetcher (NOT exercised in the sandbox — no network).
+    """Real-HTTP fetcher (NOT exercised against a network in the sandbox).
 
     Mirrors the reference client semantics: pooled Session per worker
     (core/client.py:83), rotating User-Agent (core/client.py:100-112),
@@ -301,108 +357,11 @@ class HttpFetcher:
                 "HttpFetcher requires the 'requests' package; use "
                 "SyntheticFetcher in offline environments"
             ) from exc
-        out_schema = fetched_schema(scheduled.schema)
-        out_cols = [f.name for f in out_schema.fields]
-        timeout, uas = self.timeout_s, self.user_agents
-        sink_dir = self.media_sink_dir
-        proxies, cookies = self.proxies, self.cookies
-
-        chunk_size = 10 * 1024 * 1024  # reference const.py:1 CHUNK_SIZE
-        has_backups = "backup_urls" in scheduled.columns
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:  # pragma: no cover
-            import time
-
-            import requests
-
-            session = requests.Session()
-            _install_cookies(session, cookies)
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx else -1
-
-            def read_candidate(u: str, attempt: int):
-                try:
-                    resp = session.get(
-                        u,
-                        stream=True,
-                        **_http_request_kwargs(
-                            uas[attempt % len(uas)], timeout, proxies
-                        ),
-                    )
-                    payload = b"".join(resp.iter_content(chunk_size=chunk_size))
-                    return resp.status_code, payload, None
-                except requests.RequestException as exc:
-                    return None, b"", f"{type(exc).__name__}: {exc}"
-
-            for pdf in batches:
-                statuses, bodies, lats, errs = [], [], [], []
-                mrefs, mbytes, mchunks, nbytes, mpaths = [], [], [], [], []
-                backups = pdf["backup_urls"] if has_backups else [None] * len(pdf)
-                kinds = pdf["kind"] if "kind" in pdf.columns else [""] * len(pdf)
-                for i, (url, kind, backup) in enumerate(zip(pdf["url"], kinds, backups)):
-                    t0 = time.monotonic()
-                    if kind == "media":
-                        cands = [url] + (list(backup) if backup is not None else [])
-                        status, err, mref, mb, nch = _fetch_media_chunked(
-                            read_candidate, cands, 0, chunk_size
-                        )
-                        nbytes.append(len(mb) if mb is not None else None)
-                        path = None
-                        if sink_dir is not None and mb is not None:
-                            import os
-
-                            os.makedirs(sink_dir, exist_ok=True)
-                            path = os.path.join(sink_dir, media_filename(url))
-                            with open(path, "wb") as fh:
-                                for ci in range(0, len(mb), chunk_size):
-                                    fh.write(mb[ci : ci + chunk_size])
-                            mb = None
-                        statuses.append(status)
-                        bodies.append(None)
-                        errs.append(err)
-                        mrefs.append(mref)
-                        mbytes.append(mb)
-                        mchunks.append(nch)
-                        mpaths.append(path)
-                        lats.append(int((time.monotonic() - t0) * 1000))
-                        continue
-                    try:
-                        resp = session.get(
-                            url,
-                            **_http_request_kwargs(
-                                uas[i % len(uas)], timeout, proxies
-                            ),
-                        )
-                        statuses.append(resp.status_code)
-                        bodies.append(resp.text)
-                        errs.append(None)
-                    except requests.RequestException as exc:
-                        statuses.append(None)
-                        bodies.append(None)
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                    mrefs.append(None)
-                    mbytes.append(None)
-                    mchunks.append(None)
-                    nbytes.append(None)
-                    mpaths.append(None)
-                    lats.append(int((time.monotonic() - t0) * 1000))
-                yield pdf.assign(
-                    status=pd.array(statuses, dtype="Int32"),
-                    body=pd.array(bodies, dtype="object"),
-                    latency_ms=pd.array(lats, dtype="int32"),
-                    error=pd.array(errs, dtype="object"),
-                    partition_id=pid,
-                    media_ref=pd.array(mrefs, dtype="object"),
-                    media_bytes=pd.array(mbytes, dtype="object"),
-                    n_chunks=pd.array(mchunks, dtype="Int32"),
-                    media_path=pd.array(mpaths, dtype="object"),
-                    bytes_fetched=pd.array(nbytes, dtype="Int64"),
-                )[out_cols]
-
-        scheduled = partition_for_fetch(
-            scheduled, self.partitions, self.colocate_hosts
+        open_reader = functools.partial(
+            _http_reader, self.timeout_s, list(self.user_agents),
+            self.proxies, self.cookies,
         )
-        return scheduled.mapInPandas(run, schema=out_schema)
+        return reader_fetch(scheduled, open_reader, self, HTTP_CHUNK_SIZE)
 
 
 class ProceduralFetcher:
@@ -445,8 +404,6 @@ class ProceduralFetcher:
             import pyarrow as pa
             import pyarrow.compute as pc
 
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx else -1
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
@@ -455,18 +412,10 @@ class ProceduralFetcher:
                 for tail in pieces[1:]:
                     args += [u, tail]
                 bodies = pc.binary_join_element_wise(*args, "").to_pandas()
-                yield pdf.assign(
-                    status=pd.array([200] * len(pdf), dtype="int32"),
-                    body=bodies,
-                    latency_ms=pd.array([1] * len(pdf), dtype="int32"),
-                    error=pd.array([None] * len(pdf), dtype="object"),
-                    partition_id=pid,
-                    media_ref=pd.array([None] * len(pdf), dtype="object"),
-                    media_bytes=pd.array([None] * len(pdf), dtype="object"),
-                    n_chunks=pd.array([None] * len(pdf), dtype="Int32"),
-                    media_path=pd.array([None] * len(pdf), dtype="object"),
-                    bytes_fetched=pd.array([None] * len(pdf), dtype="Int64"),
-                )[out_cols]
+                yield with_fetch_columns(
+                    pdf, out_cols, status=[200] * len(pdf), body=bodies,
+                    latency_ms=[1] * len(pdf),
+                )
 
         scheduled = partition_for_fetch(
             scheduled, self.partitions, self.colocate_hosts

@@ -267,15 +267,10 @@ class SnapshotStorage:
             json.dump(manifest, fh)
         return Staged(table, snap, manifest)
 
-    def stage_overwrite(
-        self, table: str, df: DataFrame, partition_by: list[str] | None = None
-    ) -> Staged:
+    def stage_overwrite(self, table: str, df: DataFrame) -> Staged:
         """Full-table snapshot (K1 truncate-insert / bootstrap / frontier flip)."""
         snap = self._next_snap(table)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._data_dir(table, snap))
+        df.write.mode("overwrite").parquet(self._data_dir(table, snap))
         return self._stage_manifest(
             table, snap, {"files": [self._data_dir(table, snap, rel=True)]}
         )
@@ -499,11 +494,9 @@ class SnapshotStorage:
             catalog[s.table] = s.snap
         self._write_catalog(catalog)
 
-    def commit(
-        self, table: str, df: DataFrame, partition_by: list[str] | None = None
-    ) -> int:
+    def commit(self, table: str, df: DataFrame) -> int:
         """Stage a full-table snapshot and flip the catalog."""
-        staged = self.stage_overwrite(table, df, partition_by)
+        staged = self.stage_overwrite(table, df)
         self.commit_multi([staged])
         return staged.snap
 
@@ -541,7 +534,7 @@ class SnapshotStorage:
                     total += os.path.getsize(os.path.join(root, f))
         return total
 
-    def compact(self, table: str, partition_by: list[str] | None = None) -> int:
+    def compact(self, table: str) -> int:
         """Incremental compaction (Iceberg rewrite_data_files, binpack).
 
         * files-layout (append-only seen/fetch_log): size-tiered fold —
@@ -594,10 +587,7 @@ class SnapshotStorage:
             *[os.path.join(base, r) for r in fold]
         )
         new_snap = self._next_snap(table)
-        writer = folded.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._data_dir(table, new_snap))
+        folded.write.mode("overwrite").parquet(self._data_dir(table, new_snap))
         # kept dirs stay in their ORIGINAL manifest positions (commit
         # order), folded dir appended — list order stays meaningful for
         # any consumer that treats it as commit order (ADVICE r03)

@@ -91,8 +91,9 @@ MODES = {
 
 
 def run_engine(spark, world, tmp, *, budget, use_bloom=False,
-               salt_n=1, max_attempts=3, use_cuckoo=False):
-    storage = SnapshotStorage(spark, str(tmp))
+               salt_n=1, max_attempts=3, use_cuckoo=False,
+               storage_cls=SnapshotStorage):
+    storage = storage_cls(spark, str(tmp))
     cfg = CrawlConfig(
         max_rounds=40,
         default_budget=budget,
@@ -454,19 +455,48 @@ def test_evict_recrawls_url(spark, world, tmp_path, mode):
         assert after[d][0] == before[d][0], f"create_at changed for {d}"
 
 
+class _MediaMetaPlans(SnapshotStorage):
+    """Storage that records the executed plan of every DataFrame staged
+    into ``media_meta``."""
+
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self.media_meta_plans: list[str] = []
+
+    def stage_append(self, table, df, *args, **kwargs):
+        if table == "media_meta":
+            self.media_meta_plans.append(
+                df._jdf.queryExecution().executedPlan().toString()
+            )
+        return super().stage_append(table, df, *args, **kwargs)
+
+
 def test_media_meta_table_and_sink(spark, world, tmp_path):
     """The engine defaults media to the warehouse file sink (bytes never in
-    a plan column) and commits a typed media_meta row per fetched payload,
-    sniffed from the sink file, in the same atomic flip."""
+    a plan column) and commits a typed media_meta row per fetched payload
+    in the same atomic flip.  The fetch worker sniffs each payload as it
+    writes it, so the media_meta staging job runs no Python."""
     import os
 
-    storage, _ = run_engine(spark, world, tmp_path / "mm", budget=5)
+    from test_seen_probe import PYTHON_EXECS
+
+    from spiders_for_all_spark.operators.multimodal import sniff_format
+
+    storage, _ = run_engine(
+        spark, world, tmp_path / "mm", budget=5, storage_cls=_MediaMetaPlans
+    )
+    assert storage.media_meta_plans
+    for plan in storage.media_meta_plans:
+        assert not [p for p in PYTHON_EXECS if p in plan], plan
     meta = {r["media_ref"]: r for r in storage.read("media_meta").collect()}
     assert world["media_backup"] in meta
     r = meta[world["media_backup"]]
     assert r["media_path"] and os.path.exists(r["media_path"])
     assert r["n_bytes"] == os.path.getsize(r["media_path"])
     assert r["format"] is not None and r["media_kind"] is not None
+    for r in meta.values():
+        with open(r["media_path"], "rb") as fh:
+            assert (r["format"], r["media_kind"]) == sniff_format(fh.read()), r
     # sink-mode lineage: every successful media fetch logged a path and an
     # explicit byte count (ADVICE r02 — no NULL byte accounting on the
     # at-scale path), and the sniffed size matches it

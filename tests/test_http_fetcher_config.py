@@ -64,3 +64,54 @@ def test_http_fetcher_stores_copies():
     assert f.proxies == {"https": "http://p:1"}
     assert f.cookies == {"k": "v"}
     assert HttpFetcher().proxies is None and HttpFetcher().cookies is None
+
+
+class _Resp:
+    def __init__(self, status, text="", content=b""):
+        self.status_code, self.text, self.content = status, text, content
+
+    def iter_content(self, chunk_size):
+        for i in range(0, len(self.content), chunk_size):
+            yield self.content[i : i + chunk_size]
+
+
+class _RecordingSession(_StubSession):
+    def __init__(self, responses):
+        super().__init__()
+        self.responses, self.calls = responses, []
+
+    def get(self, url, **kwargs):
+        self.calls.append((url, kwargs))
+        resp = self.responses[url]
+        if isinstance(resp, Exception):
+            raise resp
+        return resp
+
+
+def test_http_reader_rotates_user_agent_per_request():
+    import requests
+
+    from spiders_for_all_spark.sources.fetcher import _http_reader
+
+    session = _RecordingSession({
+        "https://h/p": _Resp(200, text="<html>"),
+        "https://h/m.jpg": _Resp(200, content=b"\xff\xd8\xff" + b"x" * 30),
+        "https://h/down": requests.ConnectionError("refused"),
+    })
+    read = _http_reader(3.0, ["ua0", "ua1", "ua2"], None, {"k": "v"}, session=session)
+    assert dict(session.cookies) == {"k": "v"}
+
+    status, body, err, ms = read("https://h/p", 0, False)
+    assert (status, body, err) == (200, "<html>", None) and ms >= 0
+    status, body, err, _ = read("https://h/m.jpg", 0, True)
+    assert (status, body, err) == (200, b"\xff\xd8\xff" + b"x" * 30, None)
+    status, body, err, ms = read("https://h/down", 0, True)
+    assert status is None and body is None and ms >= 0
+    assert err == "ConnectionError: refused"
+    read("https://h/p", 0, False)
+
+    # one User-Agent per request, rotating whatever the row or attempt
+    uas = [kw["headers"]["User-Agent"] for _, kw in session.calls]
+    assert uas == ["ua0", "ua1", "ua2", "ua0"]
+    assert [kw["stream"] for _, kw in session.calls] == [False, True, True, False]
+    assert all(kw["timeout"] == 3.0 for _, kw in session.calls)

@@ -23,12 +23,14 @@ def media(spark):
 
 
 def test_media_meta_sniffing(media):
-    out = {r["media_ref"]: r for r in MM.extract_media_meta(media).collect()}
-    assert (out["m1"]["format"], out["m1"]["kind"], out["m1"]["n_bytes"]) == ("jpeg", "image", 104)
+    out = {r["media_ref"]: r for r in MM.sniff_media_meta(media).collect()}
+    assert (out["m1"]["format"], out["m1"]["media_kind"], out["m1"]["n_bytes"]) == ("jpeg", "image", 104)
     assert out["m2"]["format"] == "png"
-    assert out["m3"]["kind"] == "audio"
-    assert out["m4"]["kind"] == "unknown"
-    assert out["m5"]["n_bytes"] == 0 and out["m5"]["format"] is None
+    assert out["m3"]["media_kind"] == "audio"
+    assert out["m4"]["media_kind"] == "unknown"
+    assert out["m5"]["n_bytes"] is None and out["m5"]["format"] is None
+    # input columns pass through
+    assert bytes(out["m4"]["payload"]) == b"zzzz"
 
 
 def test_image_features_shape_and_determinism(media):

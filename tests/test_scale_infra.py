@@ -171,10 +171,10 @@ def test_merge_blooms_equals_full_build(spark, hashes):
 
 
 def test_media_sink_streams_to_files(spark, tmp_path):
-    """S6 scale path: with a media sink, payloads are chunk-streamed to
-    files inside the fetch worker and only the path/ref travel through the
-    plan (media_bytes stays null — SURVEY §2 S6 'never materialize bytes
-    in a column')."""
+    """S6 scale path: with a media sink, payloads are written to files
+    inside the fetch worker and only the path/ref travel through the plan
+    (no bytes column — SURVEY §2 S6 'never materialize bytes in a
+    column')."""
     import os
 
     from spiders_for_all_spark.operators.frontier import seeds_to_frontier
@@ -194,7 +194,7 @@ def test_media_sink_streams_to_files(spark, tmp_path):
     ).fetch(fr).collect()
     payloads = {m["url"]: m["body"].encode() for m in media}
     for r in fetched:
-        assert r["media_bytes"] is None
+        assert "media_bytes" not in r.asDict()
         assert r["media_path"] and os.path.exists(r["media_path"])
         assert open(r["media_path"], "rb").read() == payloads[r["url"]]
 
