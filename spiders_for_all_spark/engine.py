@@ -5,8 +5,8 @@ driver (reference: core/spider.py:245-248,295-327) with the round loop of
 SURVEY §3.1:
 
     frontier -> anti-join seen (exact | bloom | deletable cuckoo: a Catalyst
-                probe joined on bucket + exact-confirm; eviction
-                tombstones subtracted)
+                probe of the filter segments joined on bucket +
+                exact-confirm; eviction tombstones subtracted)
              -> robots gate (broadcast join)
              -> politeness window top-k per host (per-host salting for
                 hot hosts only)
@@ -18,8 +18,9 @@ SURVEY §3.1:
              -> documents MERGE (merge-on-read delta, upsert by doc_id)
              -> media_meta (a select over the fetch's media columns)
              -> successors/retries -> next frontier
-             -> seen += fetched; fetch_log += lineage; filter insert delta
-                (cogrouped: with fetch, the round's only Python stages)
+             -> seen += fetched; fetch_log += lineage; filter += one
+                segment built from the seen delta alone (with fetch, the
+                round's only Python stages)
              -> ONE atomic multi-table snapshot commit (resumable
                 checkpoint, north_rule); periodic compaction + expiry
 
@@ -58,14 +59,12 @@ class CrawlConfig:
     # (evict()) removes hashes from the probe filter itself rather than
     # relying on the exact-confirm alone (north_star: "cuckoo-filter
     # fallback for deletions"); cuckoo wins when both are set.  Either is
-    # a committed table: each round inserts just the seen DELTA cogrouped
-    # (O(delta)/round) instead of rebuilding the filter from the full seen
-    # set (VERDICT r03 item 2); full rebuild+resize at compaction
+    # a committed log of segments: each round appends one segment sized
+    # from its own seen DELTA (O(delta) bytes/round), and compaction folds
+    # them into one segment built from the live seen set
     use_bloom: bool = False
     use_cuckoo: bool = False
     n_buckets: int = D.DEFAULT_BUCKETS
-    # expected seen keys per bucket: the size of a new filter bucket
-    filter_capacity_per_bucket: int = 10_000
     # fold append-only seen/fetch_log deltas back into one dir every N rounds
     # (Iceberg rewrite_data_files): keeps file counts bounded on long crawls
     compact_every: int = 64
@@ -126,7 +125,7 @@ class Crawler:
         self.seen_filter = D.SeenFilter(
             "cuckoo" if cfg.use_cuckoo else "bloom" if cfg.use_bloom else "exact",
             cfg.n_buckets,
-            cfg.filter_capacity_per_bucket,
+            cfg.compact_every,
         )
         # default media to the warehouse file sink: bytes stream to files
         # INSIDE the fetch worker and never materialize in a plan column
@@ -173,13 +172,15 @@ class Crawler:
         staged = [staged_evicted, staged_frontier]
         filt = self.seen_filter
         if filt.deletes and self.storage.latest_snapshot(filt.table) is not None:
-            # the persisted probe filter drops the fingerprints in the
-            # SAME flip as the tombstones — filter and tombstone view of
-            # the live seen set can never diverge across a crash
+            # the persisted probe filter drops the fingerprints of the
+            # still-live keys in the SAME flip as the tombstones — filter
+            # and tombstone view of the live seen set can never diverge
+            # across a crash
             filt.filters = self.storage.read(filt.table)
             staged.append(
                 self.storage.stage_overwrite(
-                    filt.table, filt.delete(rows.select("url_hash"))
+                    filt.table,
+                    filt.delete(rows.select("url_hash"), self._live_seen()[0]),
                 )
             )
         self.storage.commit_multi(staged)
@@ -259,14 +260,14 @@ class Crawler:
         filt = self.seen_filter
         if filt.table is not None:
             if storage.latest_snapshot(filt.table) is None:
-                # first use: commit a filter built from the committed seen
-                # set (consistent with round N-1, so no partial round
-                # shows), then read it back like every later round — the
-                # build never rides along into this round's jobs
-                storage.commit(filt.table, filt.build(seen))
-            # the filter was committed with last round's seen delta (and
+                # first use: commit a segment built from the committed seen
+                # set (consistent with round N-1, so it carries N-1), then
+                # read it back like every later round — the build never
+                # rides along into this round's jobs
+                storage.commit(filt.table, filt.build(seen, round_no - 1))
+            # every committed round appended its delta's segment (and
             # evict() already removed tombstoned cuckoo fingerprints) — no
-            # O(|seen|) rebuild on the hot path
+            # O(|seen|) build on the hot path
             filt.filters = storage.read(filt.table)
         candidates = filt.probe(frontier, seen)
 
@@ -357,7 +358,7 @@ class Crawler:
         seen_delta = D.with_bucket(
             ok.select("url_hash").unionByName(dead.select("url_hash")),
             cfg.n_buckets,
-        )
+        ).withColumn("round", F.lit(round_no))
         stage_jobs.append(lambda: storage.stage_append("seen", seen_delta))
 
         # 9. fetch_log lineage (A1 metrics, per partition) — append-only:
@@ -458,11 +459,11 @@ class Crawler:
                 lambda: storage.stage_append("media_meta", media_meta)
             )
         if filt.table is not None:
-            # insert the round's delta into the persisted filter — O(delta)
-            # work, committed in the same flip as the seen delta itself so
-            # the filter and the set can never diverge across a crash
+            # append one segment built from the round's delta alone —
+            # O(delta) bytes, committed in the same flip as the seen delta
+            # itself so the filter and the set can never diverge
             stage_jobs.append(
-                lambda: storage.stage_overwrite(filt.table, filt.insert(seen_delta))
+                lambda: storage.stage_append(filt.table, filt.build(seen_delta, round_no))
             )
         if evicted is not None:
             # clear tombstones whose URL was re-fetched this round (its hash
@@ -490,12 +491,9 @@ class Crawler:
         # frontier is overwritten every round — expire superseded snapshots
         # now (pure os-level dir removal) instead of letting up to
         # compact_every full frontier copies pile up between maintenance
-        # passes; other tables expire in the maintenance block below
+        # passes; the append tables expire in the maintenance block below
         if cfg.expire_keep_last:
             storage.expire_snapshots("frontier", keep_last=cfg.expire_keep_last)
-            if filt.table is not None:
-                # like frontier, the filter table is overwritten per round
-                storage.expire_snapshots(filt.table, keep_last=cfg.expire_keep_last)
 
         # maintenance: fold append/MoR deltas periodically (size-tiered for
         # the append tables, touched-buckets-only for documents) and expire
@@ -506,12 +504,13 @@ class Crawler:
             storage.compact("documents")
             storage.compact("media_meta")
             if filt.table is not None:
-                # the full rebuild (from the LIVE seen set, minus pending
-                # eviction tombstones) RESIZES the filter to the grown set
-                storage.commit(filt.table, filt.rebuild(self._live_seen()[0]))
+                # fold the segments: one segment per bucket, built from the
+                # LIVE seen set (minus pending eviction tombstones), which
+                # now holds every hash through this round
+                storage.commit(filt.table, filt.build(self._live_seen()[0], round_no))
             if cfg.expire_keep_last:
-                for t in ("seen", "fetch_log", "documents", "media_meta", "evicted"):
-                    if storage.latest_snapshot(t) is not None:
+                for t in ("seen", "fetch_log", "documents", "media_meta", "evicted", filt.table):
+                    if t is not None and storage.latest_snapshot(t) is not None:
                         storage.expire_snapshots(t, keep_last=cfg.expire_keep_last)
 
         # docs total only matters for the A2 cap check — avoid the extra job

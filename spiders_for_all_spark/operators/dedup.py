@@ -4,20 +4,23 @@ prefilter (J1).
 The reference dedups via DB unique constraints and ``sorted(set(ids))``
 (reference: core/spider.py:218-236, utils/helper.py:55,
 spiders/bilibili/downloader.py:295).  At 10^10 URLs the exact seen table is
-hash-bucketed by ``pmod(url_hash, n_buckets)`` and fronted by one filter
-per bucket (bloom bitmap or cuckoo table) built in an Arrow-batched
-``applyInPandas`` aggregation (Spark's ``bloom_filter_agg`` is JVM-internal
-and not persistable, SURVEY §4.3.1).  Probes are pure Catalyst: the
-frontier left-joins its bucket's filter row and a Column expression, bit-
-exact with the numpy filters, tests membership — no Python worker.  The
-planner broadcasts a small filter table; at 10^10 keys (GBs of filters)
-its size estimate forces a shuffle join on ``bucket``, so the table never
-passes through the driver.  Filter *pass* (possibly-seen) rows are always
-exact-confirmed before being dropped, so false positives can never lose a
-URL — the filter only shrinks the exact join's probe side.  Filters are
-maintained incrementally: a round's seen delta is inserted cogrouped,
-O(delta) work; build, insert and delete stay cogrouped ``applyInPandas``
-(the cuckoo kick path is sequential).
+hash-bucketed by ``pmod(url_hash, n_buckets)`` and fronted by a log of
+filter SEGMENTS: each segment is one filter per bucket (bloom bitmap or
+cuckoo table), built in an Arrow-batched ``applyInPandas`` aggregation
+(Spark's ``bloom_filter_agg`` is JVM-internal and not persistable, SURVEY
+§4.3.1) from one batch of keys and sized from its actual key count.  A
+round appends one segment built from its own seen delta, so it writes
+O(delta) filter bytes; compaction folds the segments into one, built from
+the live seen set.  Probes are pure Catalyst: the frontier anti-/semi-
+joins its bucket's segments with a Column membership test, bit-exact with
+the numpy filters, as the join condition — a row is possibly seen if any
+segment says so, and no Python worker starts.  The planner broadcasts a
+small filter table; at 10^10 keys its size estimate forces a shuffle join
+on ``bucket``, so the table never passes through the driver.  Possibly-
+seen rows are always exact-confirmed before being dropped, so false
+positives can never lose a URL — the filter only shrinks the exact join's
+probe side.  Cuckoo deletions are exact: a key leaves exactly the segment
+that holds it, and only if it is in the live seen set.
 :class:`SeenFilter` puts one mode (exact, bloom, cuckoo) behind one
 interface.
 """
@@ -46,67 +49,34 @@ def seen_anti_join(frontier: DataFrame, seen: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Per-bucket plumbing shared by both filter kinds.  A filter table holds one
-# row per bucket; each kind supplies how to build a bucket's row from its
-# hashes, how to add hashes to a stored row, and how to test membership.
+# Per-bucket plumbing shared by both filter kinds.  A filter table is a set
+# of SEGMENTS: each segment is one row per bucket, built from one batch of
+# keys (a round's seen delta, or the whole seen set) and tagged with its
+# ``round``.  A bucket's segments are probed as a union.
 
 
-def _build(seen: DataFrame, n_buckets: int, fresh: Callable, schema: str) -> DataFrame:
-    """One filter row per bucket of ``seen``: ``fresh(bucket, hashes)``."""
+def _build(keys: DataFrame, n_buckets: int, round_no: int, fresh: Callable,
+           schema: str) -> DataFrame:
+    """One segment over ``keys``: ``fresh(bucket, hashes)`` per bucket,
+    sized from that bucket's distinct key count."""
 
     def agg(pdf: pd.DataFrame) -> pd.DataFrame:
-        return fresh(int(pdf["bucket"].iloc[0]), pdf["url_hash"].to_numpy(np.int64))
+        hashes = np.unique(pdf["url_hash"].to_numpy(np.int64))
+        return fresh(int(pdf["bucket"].iloc[0]), hashes).assign(round=round_no)
 
-    bucketed = with_bucket(seen.select("url_hash"), n_buckets)
+    bucketed = with_bucket(keys.select("url_hash"), n_buckets)
     return bucketed.groupBy("bucket").applyInPandas(agg, schema=schema)
 
 
-def _cogroup_keys(
-    filters: DataFrame, keys: DataFrame, n_buckets: int, fn: Callable, schema: str
-) -> DataFrame:
-    """``fn(filter_rows, key_rows)`` once per bucket present on either side:
-    each bucket's filter row meets only its own keys."""
-    keyed = with_bucket(keys.select("url_hash"), n_buckets)
-    return (
-        filters.groupby("bucket")
-        .cogroup(keyed.groupby("bucket"))
-        .applyInPandas(fn, schema=schema)
-    )
-
-
-def _insert(
-    filters: DataFrame,
-    additions: DataFrame,
-    n_buckets: int,
-    fresh: Callable,
-    add: Callable,
-    schema: str,
-) -> DataFrame:
-    """Cogrouped bulk insert — the O(delta) incremental-maintenance path.
-
-    Untouched buckets pass through by reference; a bucket with additions
-    but no filter yet gets ``fresh(bucket, hashes)`` (first rows ever
-    hashed there); a stored row becomes ``add(row, hashes)``.
-    """
-
-    def apply_ins(stored: pd.DataFrame, toadd: pd.DataFrame) -> pd.DataFrame:
-        if len(toadd) == 0:
-            return stored
-        hashes = toadd["url_hash"].to_numpy(np.int64)
-        if len(stored) == 0:
-            return fresh(int(toadd["bucket"].iloc[0]), hashes)
-        return add(stored, hashes)
-
-    return _cogroup_keys(filters, additions, n_buckets, apply_ins, schema)
-
-
-def _mark_maybe(fb: DataFrame, filters: DataFrame, member: Column) -> DataFrame:
-    """``fb`` (bucketed) plus ``_maybe``: ``member`` over each row's
-    ``url_hash`` and its bucket's filter row.  A bucket with no filter row
-    holds nothing seen, so its rows are definitely new."""
-    return fb.join(filters, on="bucket", how="left").select(
-        *fb.columns, F.coalesce(member, F.lit(False)).alias("_maybe")
-    )
+def _split(fb: DataFrame, filters: DataFrame, member: Column) -> tuple[DataFrame, DataFrame]:
+    """(definitely new, maybe seen) rows of the bucketed ``fb``.  A row is a
+    maybe if ``member`` holds against any segment row of its bucket; a
+    bucket with no segment holds nothing seen.  Both are joins on
+    ``bucket`` with ``member`` as the join condition, so neither
+    duplicates a row."""
+    segments = filters.withColumnRenamed("bucket", "_segment_bucket")
+    cond = (F.col("bucket") == F.col("_segment_bucket")) & member
+    return fb.join(segments, cond, "left_anti"), fb.join(segments, cond, "left_semi")
 
 
 def _probe(
@@ -119,30 +89,27 @@ def _probe(
     """Filter-prefiltered anti-join: a Catalyst membership test + exact
     confirm.
 
-    The frontier joins its bucket's filter row (broadcast while the filter
-    table is small, shuffled on ``bucket`` at scale); ``member`` marks
-    possibly-seen rows.  Output is row-identical to :func:`seen_anti_join`
-    over the same seen set — the filter can only send extra rows to the
-    exact confirm, never skip one.
+    The frontier joins its bucket's segment rows (broadcast while the
+    filter table is small, shuffled on ``bucket`` at scale).  Output is
+    row-identical to :func:`seen_anti_join` over the same seen set — the
+    filter can only send extra rows to the exact confirm, never skip one.
     """
-    probed = _mark_maybe(with_bucket(frontier, n_buckets), filters, member)
-    definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe", "bucket")
-    maybe_seen = probed.filter(F.col("_maybe")).drop("_maybe", "bucket")
+    definitely_new, maybe_seen = _split(with_bucket(frontier, n_buckets), filters, member)
     confirmed_new = maybe_seen.join(
         seen.select("url_hash"), on="url_hash", how="left_anti"
     )
-    return definitely_new.unionByName(confirmed_new)
+    return definitely_new.drop("bucket").unionByName(confirmed_new.drop("bucket"))
 
 
 # ---------------------------------------------------------------------------
 # Partitioned bloom filter.
 #
-# Layout: one row per bucket — (bucket int, n_bits int, n_hashes int,
-# bits binary).  k probe positions are derived from the 64-bit url_hash by
+# Layout: one row per bucket and segment — (bucket int, round int, n_bits
+# int, n_hashes int, bits binary).  k probe positions are derived from the 64-bit url_hash by
 # double hashing: pos_i = (h1 + i*h2) mod n_bits with h1 = high 32 bits,
 # h2 = low 32 bits | 1 (Kirsch–Mitzenmacher; public-domain construction).
 
-BLOOM_SCHEMA = "bucket int, n_bits int, n_hashes int, bits binary"
+BLOOM_SCHEMA = "bucket int, round int, n_bits int, n_hashes int, bits binary"
 
 
 def _positions(hashes: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
@@ -161,15 +128,9 @@ def bloom_params(expected_per_bucket: int, fpp: float = 0.01) -> tuple[int, int]
     return n_bits, min(n_hashes, 16)
 
 
-def _bloom_row(
-    bucket: int,
-    hashes: np.ndarray,
-    n_bits: int,
-    n_hashes: int,
-    bits: np.ndarray | None = None,
-) -> pd.DataFrame:
-    """One bucket's bitmap row: ``bits`` (or an empty bitmap) | hashes."""
-    bits = np.zeros(n_bits // 8, dtype=np.uint8) if bits is None else bits.copy()
+def _bloom_row(bucket: int, hashes: np.ndarray, n_bits: int, n_hashes: int) -> pd.DataFrame:
+    """One bucket's bitmap row over ``hashes``."""
+    bits = np.zeros(n_bits // 8, dtype=np.uint8)
     flat = _positions(hashes, n_bits, n_hashes).ravel()
     np.bitwise_or.at(bits, flat // 8, (1 << (flat % 8)).astype(np.uint8))
     return pd.DataFrame(
@@ -183,46 +144,16 @@ def _bloom_row(
 
 
 def build_bloom(
-    seen: DataFrame,
+    keys: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
-    expected_per_bucket: int = 10_000,
+    round_no: int = 0,
     fpp: float = 0.01,
 ) -> DataFrame:
-    """Per-bucket bloom bitmaps over seen.url_hash (applyInPandas UDAF)."""
-    n_bits, n_hashes = bloom_params(expected_per_bucket, fpp)
+    """One bloom segment over keys.url_hash (applyInPandas UDAF): each
+    bucket's bitmap is sized for its own key count at ``fpp``."""
     return _build(
-        seen, n_buckets, lambda b, h: _bloom_row(b, h, n_bits, n_hashes), BLOOM_SCHEMA
-    )
-
-
-def bloom_insert(
-    bloom: DataFrame,
-    additions: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
-    expected_per_bucket: int = 10_000,
-    fpp: float = 0.01,
-) -> DataFrame:
-    """Set the bits of url_hashes in the per-bucket bitmaps, cogrouped.
-
-    Blooms are mergeable sketches, so inserting a round's seen delta into
-    the stored bitmaps equals a full build over seen ∪ delta, at O(delta)
-    cost.  A stored bucket keeps its own ``n_bits``/``n_hashes`` (no
-    driver-side sizing job); a bucket with no bitmap yet is sized from
-    ``expected_per_bucket``.  Resizing happens only at the compaction
-    rebuild (:func:`build_bloom`).
-    """
-    n_bits, n_hashes = bloom_params(expected_per_bucket, fpp)
-
-    def add(stored: pd.DataFrame, hashes: np.ndarray) -> pd.DataFrame:
-        row = stored.iloc[0]
-        return _bloom_row(
-            int(row["bucket"]), hashes, int(row["n_bits"]), int(row["n_hashes"]),
-            np.frombuffer(bytes(row["bits"]), np.uint8),
-        )
-
-    return _insert(
-        bloom, additions, n_buckets,
-        lambda b, h: _bloom_row(b, h, n_bits, n_hashes), add, BLOOM_SCHEMA,
+        keys, n_buckets, round_no,
+        lambda b, h: _bloom_row(b, h, *bloom_params(len(h), fpp)), BLOOM_SCHEMA,
     )
 
 
@@ -256,7 +187,7 @@ def seen_anti_join_bloom(
 # Cuckoo filter: the deletable seen-set fallback (north_star — re-crawl
 # eviction).  Standard 2-choice, 4-slot-bucket, 16-bit-fingerprint cuckoo
 # filter (Fan et al., CoNEXT'14 construction, public domain idea), stored
-# one filter per seen-bucket as a uint16 table blob.
+# one filter per seen-bucket and segment as a uint16 table blob.
 
 
 class CuckooFilter:
@@ -264,7 +195,7 @@ class CuckooFilter:
     MAX_KICKS = 250
 
     def __init__(self, capacity: int, table: np.ndarray | None = None):
-        n = max(int(capacity / 0.85 / self.SLOTS), 4)
+        n = max(math.ceil(capacity / 0.85 / self.SLOTS), 4)  # load <= 0.85
         self.m = 1 << (n - 1).bit_length()  # power-of-two bucket count
         self.table = (
             table
@@ -273,6 +204,10 @@ class CuckooFilter:
         )
 
     # -- key mapping ------------------------------------------------------
+    # The primary bucket i1 comes from the high word of the hash: the seen
+    # bucket is pmod(hash, n_buckets), so a segment's keys share their low
+    # bits, and a low-bit i1 would crowd them into m / n_buckets buckets
+    # (most small segments would overflow).
     def _fp(self, h: np.ndarray) -> np.ndarray:
         fp = ((h.astype(np.uint64) >> np.uint64(48)) & np.uint64(0xFFFF)).astype(
             np.uint16
@@ -280,7 +215,7 @@ class CuckooFilter:
         return np.where(fp == 0, np.uint16(1), fp)  # 0 marks an empty slot
 
     def _i1(self, h: np.ndarray) -> np.ndarray:
-        return (h.astype(np.uint64) % np.uint64(self.m)).astype(np.int64)
+        return ((h.astype(np.uint64) >> np.uint64(32)) % np.uint64(self.m)).astype(np.int64)
 
     def _i2(self, i1: np.ndarray, fp: np.ndarray) -> np.ndarray:
         return (
@@ -338,7 +273,7 @@ class CuckooFilter:
         u = h & 0xFFFFFFFFFFFFFFFF
         fp = ((u >> 48) & 0xFFFF) or 1
         m = self.m
-        i1 = u % m
+        i1 = (u >> 32) % m
         i2 = (i1 ^ (fp * 0x5BD1E995)) % m
         t = self.table
         for i in (i1, i2):
@@ -396,19 +331,18 @@ class CuckooFilter:
         return f
 
 
-CUCKOO_SCHEMA = "bucket int, capacity int, table binary, overflowed boolean"
+CUCKOO_SCHEMA = "bucket int, round int, capacity int, table binary, overflowed boolean"
 
 
-def _cuckoo_row(bucket: int, hashes: np.ndarray, capacity: int) -> pd.DataFrame:
-    """One bucket's fresh filter, sized from the ACTUAL key count (never
-    below ``capacity``) and built with the vectorized bulk path."""
-    cap = max(capacity, len(hashes))
-    f = CuckooFilter(cap)
+def _cuckoo_row(bucket: int, hashes: np.ndarray) -> pd.DataFrame:
+    """One bucket's filter, sized for its own key count and built with the
+    vectorized bulk path."""
+    f = CuckooFilter(len(hashes))
     ok = f.bulk_insert(hashes)
     return pd.DataFrame(
         {
             "bucket": [bucket],
-            "capacity": [cap],
+            "capacity": [len(hashes)],
             "table": [f.to_bytes()],
             "overflowed": [not ok],
         }
@@ -416,83 +350,77 @@ def _cuckoo_row(bucket: int, hashes: np.ndarray, capacity: int) -> pd.DataFrame:
 
 
 def build_cuckoo(
-    seen: DataFrame,
+    keys: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
-    capacity_per_bucket: int = 10_000,
+    round_no: int = 0,
 ) -> DataFrame:
-    """Per-bucket cuckoo filters over seen.url_hash (applyInPandas UDAF).
+    """One cuckoo segment over keys.url_hash (applyInPandas UDAF).
 
-    If any key still overflows, the bucket is flagged ``overflowed`` and the
-    probe routes its whole frontier slice to the exact confirm — an
-    overflow can therefore never create a false negative (a seen URL
-    re-emitted as new).
+    If a key still does not fit after the kick walk, the bucket's row is
+    flagged ``overflowed`` and the probe routes its whole frontier slice
+    to the exact confirm — an overflow can never create a false negative
+    (a seen URL re-emitted as new).
     """
-    return _build(
-        seen, n_buckets, lambda b, h: _cuckoo_row(b, h, capacity_per_bucket),
-        CUCKOO_SCHEMA,
-    )
+    return _build(keys, n_buckets, round_no, _cuckoo_row, CUCKOO_SCHEMA)
 
 
-def cuckoo_insert(
+def cuckoo_delete(
     cuckoo: DataFrame,
-    additions: DataFrame,
+    keys: DataFrame,
+    live_seen: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
-    capacity_per_bucket: int = 10_000,
 ) -> DataFrame:
-    """Bulk-insert url_hashes into the per-bucket filters, cogrouped (the
-    twin of :func:`bloom_insert`).
+    """The cuckoo table without the fingerprints of ``keys`` (re-crawl
+    eviction).
 
-    If an insert cannot be placed (the fixed-size table is past its design
-    load between rebuilds), the bucket is flagged ``overflowed`` so the
-    probe exact-confirms its whole slice — an overflow can degrade speed,
-    never correctness.  Resizing happens only at the periodic compaction
-    rebuild (:func:`build_cuckoo`).
+    A key is deleted only if it is in ``live_seen``: a fingerprint the
+    filter never took for that key may belong to another seen key.  Each
+    key is deleted from exactly one segment of its bucket: the one with
+    the smallest ``round`` at or after the round in which the key last
+    entered the seen set (a null entry round counts as -1), which is the
+    segment that holds it.  Cogrouped on (bucket, round): each segment
+    meets only its own deletions.
     """
-
-    def add(stored: pd.DataFrame, hashes: np.ndarray) -> pd.DataFrame:
-        f = CuckooFilter.from_bytes(bytes(stored["table"].iloc[0]))
-        ok = f.bulk_insert(hashes)
-        return stored.assign(
-            table=[f.to_bytes()],
-            overflowed=[bool(stored["overflowed"].iloc[0]) or not ok],
-        )
-
-    return _insert(
-        cuckoo, additions, n_buckets,
-        lambda b, h: _cuckoo_row(b, h, capacity_per_bucket), add, CUCKOO_SCHEMA,
+    entered = (
+        keys.select("url_hash")
+        .join(live_seen.select("url_hash", "round"), on="url_hash")
+        .groupBy("url_hash")
+        .agg(F.max(F.coalesce(F.col("round"), F.lit(-1))).alias("entered"))
+    )
+    targets = (
+        with_bucket(entered, n_buckets)
+        .join(cuckoo.select("bucket", "round"), on="bucket")
+        .filter(F.col("round") >= F.col("entered"))
+        .groupBy("bucket", "url_hash")
+        .agg(F.min("round").alias("round"))
     )
 
-
-def cuckoo_delete(cuckoo: DataFrame, deletions: DataFrame,
-                  n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    """Remove url_hashes from the per-bucket filters (re-crawl eviction).
-
-    Cogrouped applyInPandas: each bucket's filter meets its deletions once;
-    untouched buckets pass through.
-    """
-
-    def apply_del(filters: pd.DataFrame, todel: pd.DataFrame) -> pd.DataFrame:
-        if len(filters) == 0 or len(todel) == 0:
-            return filters
-        f = CuckooFilter.from_bytes(bytes(filters["table"].iloc[0]))
+    def apply_del(segment: pd.DataFrame, todel: pd.DataFrame) -> pd.DataFrame:
+        if len(segment) == 0 or len(todel) == 0:
+            return segment
+        f = CuckooFilter.from_bytes(bytes(segment["table"].iloc[0]))
         for h in todel["url_hash"]:
             f.delete(int(h))
-        return filters.assign(table=[f.to_bytes()])
+        return segment.assign(table=[f.to_bytes()])
 
-    return _cogroup_keys(cuckoo, deletions, n_buckets, apply_del, CUCKOO_SCHEMA)
+    return (
+        cuckoo.groupby("bucket", "round")
+        .cogroup(targets.groupby("bucket", "round"))
+        .applyInPandas(apply_del, schema=CUCKOO_SCHEMA)
+    )
 
 
 def _cuckoo_member() -> Column:
     """:meth:`CuckooFilter.contains` as a Column over ``url_hash`` and the
     row's ``table``/``overflowed``.  The bucket count m is a power of two,
-    so numpy's ``uint64 % m`` is ``h & (m-1)`` in signed longs, and
+    so numpy's ``(h >> 32) % m`` is ``(h >>> 32) & (m-1)`` in longs, and
     fp*0x5BD1E995 < 2^47.  A slot is a little-endian uint16, compared as
     its two bytes.  An overflowed bucket is lossy: every row is a maybe."""
     mask = "(bigint(shiftright(length(table), 3)) - 1)"  # m - 1
     top = "shiftrightunsigned(url_hash, 48)"
     fp = f"if({top} = 0, 1L, {top})"  # 0 marks an empty slot
     fp_le = f"unhex(lpad(hex(({fp} & 255) * 256 + shiftright({fp}, 8)), 4, '0'))"
-    i1 = f"(url_hash & {mask})"
+    i1 = f"(shiftrightunsigned(url_hash, 32) & {mask})"
     i2 = f"(({i1} ^ ({fp} * {0x5BD1E995})) & {mask})"
     slots = [
         f"substring(table, int({i} * 8 + {2 * s + 1}), 2) = {fp_le}"
@@ -521,24 +449,25 @@ class SeenFilter:
     """The crawl's URL-seen prefilter for one mode: ``"exact"`` (no filter,
     the exact anti-join alone), ``"bloom"`` or ``"cuckoo"``.
 
-    ``table`` names the committed per-bucket filter table (None for exact)
-    and ``filters`` holds its current rows: the caller reads them from
-    storage, or calls :meth:`build` on first use.  The object stays
-    storage-free — the caller stages or commits what :meth:`insert`,
-    :meth:`delete` and :meth:`rebuild` return.  A later expiring filter
-    (recrawl windows) would be one more kind behind the same methods.
+    ``table`` names the committed filter table (None for exact) and
+    ``filters`` holds its current rows, which the caller reads from
+    storage.  :meth:`build` is the one way filter rows are made: a segment
+    over a batch of keys, tagged with its round — a round's seen delta
+    (appended), or the whole live seen set (first use, and the compaction
+    fold, each committed as an overwrite).  The object stays storage-free:
+    the caller stages or commits what :meth:`build` and :meth:`delete`
+    return.  An expiring filter (recrawl windows) would drop old segments.
+
+    Each bloom segment is sized at fpp ``0.01 / compact_every``: at most
+    ``compact_every`` segments pile up between folds, so a bucket's union
+    stays near 1%.  The cuckoo's 16-bit fingerprints give ~1e-4 a segment.
 
     The dedup functions are looked up in this module at CALL time, never
     captured, so a swapped module attribute (a tracer, a test counter)
     sees every call the engine makes.
     """
 
-    def __init__(
-        self,
-        kind: str,
-        n_buckets: int = DEFAULT_BUCKETS,
-        capacity_per_bucket: int = 10_000,
-    ):
+    def __init__(self, kind: str, n_buckets: int = DEFAULT_BUCKETS, compact_every: int = 0):
         if kind not in ("exact", "bloom", "cuckoo"):
             raise ValueError(f"unknown seen-filter kind: {kind!r}")
         self.table = None if kind == "exact" else kind
@@ -546,27 +475,14 @@ class SeenFilter:
         # confirm against the live seen set
         self.deletes = kind == "cuckoo"
         self.n_buckets = n_buckets
-        self.capacity_per_bucket = capacity_per_bucket
+        self.fpp = 0.01 / compact_every if compact_every else 0.01
         self.filters: DataFrame | None = None
 
-    def build(self, live_seen: DataFrame, per_bucket: int | None = None) -> DataFrame:
-        """Build the filter from scratch (first use: configured capacity)."""
-        build = build_bloom if self.table == "bloom" else build_cuckoo
-        self.filters = build(
-            live_seen, self.n_buckets, per_bucket or self.capacity_per_bucket
-        )
-        return self.filters
-
-    def rebuild(self, live_seen: DataFrame) -> DataFrame:
-        """Rebuild RESIZED to the grown seen set (periodic compaction), so
-        bloom fpp and cuckoo load factor stay at design level over a long
-        crawl and overflowed cuckoo buckets recover; between rebuilds
-        inserts keep each bucket's size fixed."""
-        per_bucket = max(
-            self.capacity_per_bucket,
-            int(live_seen.count() * 1.25) // max(self.n_buckets, 1) + 1,
-        )
-        return self.build(live_seen, per_bucket)
+    def build(self, keys: DataFrame, round_no: int) -> DataFrame:
+        """One segment over ``keys``, tagged ``round_no``."""
+        if self.table == "bloom":
+            return build_bloom(keys, self.n_buckets, round_no, self.fpp)
+        return build_cuckoo(keys, self.n_buckets, round_no)
 
     def probe(self, df: DataFrame, seen: DataFrame) -> DataFrame:
         """``df`` minus ``seen``, row-identical to :func:`seen_anti_join`."""
@@ -575,11 +491,7 @@ class SeenFilter:
         probe = seen_anti_join_bloom if self.table == "bloom" else seen_anti_join_cuckoo
         return probe(df, seen, self.filters, self.n_buckets)
 
-    def insert(self, delta: DataFrame) -> DataFrame:
-        """The next committed table: ``filters`` plus the hashes of ``delta``."""
-        insert = bloom_insert if self.table == "bloom" else cuckoo_insert
-        return insert(self.filters, delta, self.n_buckets, self.capacity_per_bucket)
-
-    def delete(self, keys: DataFrame) -> DataFrame:
-        """The next committed table without ``keys`` (cuckoo only)."""
-        return cuckoo_delete(self.filters, keys, self.n_buckets)
+    def delete(self, keys: DataFrame, live_seen: DataFrame) -> DataFrame:
+        """The next committed table without those ``keys`` that are in
+        ``live_seen`` (cuckoo only)."""
+        return cuckoo_delete(self.filters, keys, live_seen, self.n_buckets)

@@ -59,12 +59,15 @@ FRONTIER = T.StructType(
     ]
 )
 
-# URL-seen set.  bucket = pmod(url_hash, n_buckets) partitions the bloom
-# bitmaps (operators/dedup.py).
+# URL-seen set.  bucket = pmod(url_hash, n_buckets) partitions the filter
+# segments (operators/dedup.py); round is the round in which the hash entered
+# seen (null for rows written without one), which is how a cuckoo deletion
+# finds the segment that holds the hash.
 SEEN = T.StructType(
     [
         T.StructField("url_hash", T.LongType(), False),
         T.StructField("bucket", T.IntegerType(), False),
+        T.StructField("round", T.IntegerType(), True),
     ]
 )
 
@@ -125,30 +128,32 @@ MEDIA_META = T.StructType(
     ]
 )
 
-# Persisted per-bucket bloom bitmaps over the seen set, maintained
-# INCREMENTALLY (cogrouped insert of the round's seen delta, each bucket
-# keeping its stored size — O(delta)/round) and rebuilt+resized at
-# compaction.  Committed in the same atomic flip as
-# seen, so the filter can never lag or lead the set it summarizes.
+# Persisted bloom filter over the seen set, as a log of SEGMENTS: one row
+# per (bucket, round), each bitmap sized from its own key count.  A round
+# appends the segment of its seen delta in the same atomic flip as the
+# delta, so the filter can never lag or lead the set it summarizes;
+# compaction folds all segments into one, built from the live seen set.
+# The probe reads a bucket's segments as a union.
 BLOOM = T.StructType(
     [
         T.StructField("bucket", T.IntegerType(), False),
+        T.StructField("round", T.IntegerType(), False),
         T.StructField("n_bits", T.IntegerType(), False),
         T.StructField("n_hashes", T.IntegerType(), False),
         T.StructField("bits", T.BinaryType(), False),
     ]
 )
 
-# Persisted per-bucket cuckoo filters over the seen set (the deletable
-# twin of BLOOM), maintained INCREMENTALLY: the round's seen delta is
-# bulk-inserted cogrouped (O(delta)/round), evict() deletes fingerprints
-# in the same flip as its tombstones, and a full rebuild+resize happens
-# only at compaction.  A bucket whose fixed-size table overflows is
-# flagged and its probes route to the exact confirm — never a false
-# negative.
+# Persisted cuckoo filter over the seen set (the deletable twin of BLOOM),
+# segmented the same way; capacity is the key count a segment was sized
+# for.  evict() deletes each live key's fingerprint from the one segment
+# that holds it, in the same flip as its tombstones.  A bucket whose table
+# overflows is flagged and its probes route to the exact confirm — never a
+# false negative.
 CUCKOO = T.StructType(
     [
         T.StructField("bucket", T.IntegerType(), False),
+        T.StructField("round", T.IntegerType(), False),
         T.StructField("capacity", T.IntegerType(), False),
         T.StructField("table", T.BinaryType(), False),
         T.StructField("overflowed", T.BooleanType(), False),

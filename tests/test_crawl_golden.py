@@ -103,7 +103,6 @@ def run_engine(spark, world, tmp, *, budget, use_bloom=False,
         use_cuckoo=use_cuckoo,
         salt_n=salt_n,
         n_buckets=8,
-        filter_capacity_per_bucket=64,
     )
     crawler = Crawler(
         spark, storage, SyntheticFetcher(world["site_path"], partitions=4), cfg
@@ -285,46 +284,46 @@ def test_balanced_fetch_partitioning_identical(spark, world, tmp_path, exact_ref
 
 @pytest.mark.parametrize("table", ["bloom", "cuckoo"])
 def test_cuckoo_incremental_no_full_rebuild(spark, world, tmp_path, monkeypatch, table):
-    """Steady-state filter rounds must NOT rebuild the filter from the full
-    seen set: the build runs exactly once (first use, before any filter
-    table exists); every later round reads the committed filter and
-    inserts only the round's seen delta (O(delta)/round).  Exactly one
-    counted call also proves the engine calls build_bloom / build_cuckoo
+    """Steady-state filter rounds must NOT build the filter from the full
+    seen set: exactly one build reads the committed seen table (first use,
+    before any filter table exists, tagged with the round before it); every
+    later build is that round's segment, built from its seen delta alone,
+    so its input count is the round's ok + dead-lettered count.  The
+    counted calls also prove the engine calls build_bloom / build_cuckoo
     through the dedup module at call time."""
     from spiders_for_all_spark import engine as ENG
 
-    calls: list[int] = []
+    calls: list[tuple[int, int, bool]] = []
     orig = getattr(ENG.D, f"build_{table}")
 
-    def counting(*a, **k):
-        calls.append(1)
-        return orig(*a, **k)
+    def counting(keys, n_buckets, round_no, *a, **k):
+        reads_seen = any("/seen/data-" in f for f in keys.inputFiles())
+        calls.append((round_no, keys.count(), reads_seen))
+        return orig(keys, n_buckets, round_no, *a, **k)
 
     monkeypatch.setattr(ENG.D, f"build_{table}", counting)
     storage, stats = run_engine(
         spark, world, tmp_path / f"{table}_inc", budget=2, **MODES[table]
     )
     assert len(stats.rounds) >= 3, "need a multi-round crawl to prove it"
-    assert len(calls) == 1, f"full filter build ran {len(calls)} times"
+    assert [c for c in calls if c[2]] == [calls[0]] == [(-1, 0, True)]
+    by_round = {rs.round_no: rs.ok + rs.dead_lettered for rs in stats.rounds}
+    assert [(r, n) for r, n, _ in calls[1:]] == sorted(by_round.items())
     assert storage.latest_snapshot(table) is not None
 
 
 @pytest.mark.parametrize("table", ["bloom", "cuckoo"])
 def test_cuckoo_with_compaction_identical(spark, world, tmp_path, exact_ref, table):
-    """The periodic compaction rebuild (resize from the live seen set)
-    slots into a running filter crawl without changing a single fetch.
-    The cuckoo is left with no overflowed buckets; the bloom is left with
-    grown bitmaps."""
-    from spiders_for_all_spark.operators.dedup import bloom_params
+    """The periodic compaction fold (one segment built from the live seen
+    set) slots into a running filter crawl without changing a single
+    fetch.  Right after a fold each bucket has one segment, sized from its
+    live key count; no cuckoo segment is left overflowed."""
+    from spiders_for_all_spark.operators.dedup import SeenFilter, bloom_params
 
-    # the bloom starts at a tiny capacity in few buckets, so the resize
-    # (sized from the live seen count per bucket) must grow its bitmaps
-    n_buckets, capacity = (2, 4) if table == "bloom" else (8, 64)
     storage = SnapshotStorage(spark, str(tmp_path / "compact"))
     cfg = CrawlConfig(
         max_rounds=40, default_budget=2, max_depth=3, **MODES[table],
-        n_buckets=n_buckets, filter_capacity_per_bucket=capacity, compact_every=3,
-        expire_keep_last=2,
+        n_buckets=8, compact_every=3, expire_keep_last=2,
     )
     c = Crawler(
         spark, storage, SyntheticFetcher(world["site_path"], partitions=4), cfg
@@ -335,11 +334,28 @@ def test_cuckoo_with_compaction_identical(spark, world, tmp_path, exact_ref, tab
     assert rows
     if table == "cuckoo":
         assert not any(r["overflowed"] for r in rows)
-    else:
-        first_use_bits = bloom_params(capacity)[0]
-        assert all(r["n_bits"] > first_use_bits for r in rows), [
-            r["n_bits"] for r in rows
-        ]
+
+    # the newest fold is the newest one-dir snapshot of the filter table
+    fold = max(
+        s for s in storage.snapshots(table)
+        if s <= storage.latest_snapshot(table)
+        and len(storage.data_files(table, s)) == 1
+    )
+    segs = storage.read(table, fold).collect()
+    fold_round = segs[0]["round"]
+    assert (fold_round + 1) % 3 == 0 and {r["round"] for r in segs} == {fold_round}
+    live = {
+        r["bucket"]: r["count"]
+        for r in storage.read("seen").filter(F.col("round") <= fold_round)
+        .groupBy("bucket").count().collect()
+    }
+    assert sorted(r["bucket"] for r in segs) == sorted(live)
+    fpp = SeenFilter(table, 8, cfg.compact_every).fpp
+    for r in segs:
+        if table == "cuckoo":
+            assert r["capacity"] == live[r["bucket"]]
+        else:
+            assert r["n_bits"] == bloom_params(live[r["bucket"]], fpp)[0]
 
 
 def test_evict_mid_crawl_preserves_pending(spark, world, tmp_path, exact_ref):
@@ -357,7 +373,7 @@ def test_evict_mid_crawl_preserves_pending(spark, world, tmp_path, exact_ref):
     storage = SnapshotStorage(spark, str(tmp_path / "evict_mid"))
     cfg = CrawlConfig(
         max_rounds=40, default_budget=2, max_depth=3, use_cuckoo=True,
-        n_buckets=8, filter_capacity_per_bucket=64,
+        n_buckets=8,
     )
     fetcher = SyntheticFetcher(world["site_path"], partitions=4)
     c = Crawler(spark, storage, fetcher, cfg)
@@ -394,6 +410,33 @@ def test_evict_mid_crawl_preserves_pending(spark, world, tmp_path, exact_ref):
     assert storage.read("evicted").count() == 0
 
 
+def _assert_evicted_from_target_segment(storage, url):
+    """The evicted hash left its target segment — the one with the smallest
+    round at or after the round the hash entered seen — and every other
+    key that segment holds is still a member."""
+    import numpy as np
+
+    from spiders_for_all_spark.operators.dedup import CuckooFilter
+
+    h = storage.read("fetch_log").filter(F.col("url") == url).first()["url_hash"]
+    seen = storage.read("seen").collect()
+    bucket = next(r["bucket"] for r in seen if r["url_hash"] == h)
+    segs = {
+        r["round"]: CuckooFilter.from_bytes(bytes(r["table"]))
+        for r in storage.read("cuckoo").filter(F.col("bucket") == bucket).collect()
+    }
+
+    def target(entered):
+        return min(rnd for rnd in segs if rnd >= (-1 if entered is None else entered))
+
+    seg = target(next(r["round"] for r in seen if r["url_hash"] == h))
+    assert not segs[seg].contains(np.array([h], dtype=np.int64)).any()
+    others = [r["url_hash"] for r in seen
+              if r["bucket"] == bucket and r["url_hash"] != h and target(r["round"]) == seg]
+    assert others, "the target segment should hold other keys too"
+    assert segs[seg].contains(np.array(others, dtype=np.int64)).all()
+
+
 @pytest.mark.parametrize("mode", list(MODES))
 def test_evict_recrawls_url(spark, world, tmp_path, mode):
     """North-star re-crawl eviction: evict() logically deletes a fetched URL
@@ -401,10 +444,12 @@ def test_evict_recrawls_url(spark, world, tmp_path, mode):
     mode; exact and bloom rely on the exact confirm) and re-enqueues it;
     the next round re-fetches it, refreshes update_at but keeps create_at,
     and clears the tombstone."""
+    from collections import Counter
+
     storage = SnapshotStorage(spark, str(tmp_path / "evict"))
     cfg = CrawlConfig(
         max_rounds=40, default_budget=3, max_depth=3, **MODES[mode],
-        n_buckets=8, filter_capacity_per_bucket=64,
+        n_buckets=8,
     )
     fetcher = SyntheticFetcher(world["site_path"], partitions=4)
     c = Crawler(spark, storage, fetcher, cfg)
@@ -413,15 +458,20 @@ def test_evict_recrawls_url(spark, world, tmp_path, mode):
     # a page URL that succeeded on its FIRST attempt (exactly one log row) —
     # the fail-injected retry URLs would legitimately log extra fetches
     ok_pages = sorted(
-        r["url"]
+        (r["url"], r["url_hash"])
         for r in storage.read("fetch_log")
         .filter(F.col("url").contains("/api/list"))
-        .groupBy("url")
+        .groupBy("url", "url_hash")
         .agg(F.count("*").alias("n"), F.max(F.col("error").isNull().cast("int")).alias("ok"))
         .filter((F.col("n") == 1) & (F.col("ok") == 1))
         .collect()
     )
-    url = ok_pages[0]
+    # a page that entered seen in the same round and bucket as another key,
+    # so its cuckoo segment keeps a neighbour through the eviction
+    seen = storage.read("seen").collect()
+    segment = Counter((r["bucket"], r["round"]) for r in seen)
+    where = {r["url_hash"]: (r["bucket"], r["round"]) for r in seen}
+    url = next(u for u, h in ok_pages if segment[where[h]] > 1)
     before = {
         r["doc_id"]: (r["create_at"], r["update_at"])
         for r in storage.read("documents").collect()
@@ -430,6 +480,8 @@ def test_evict_recrawls_url(spark, world, tmp_path, mode):
 
     c.evict([url])
     assert storage.read("evicted").count() == 1
+    if mode == "cuckoo":
+        _assert_evicted_from_target_segment(storage, url)
     c.run()
 
     fetches = storage.read("fetch_log").filter(F.col("url") == url).collect()
@@ -557,7 +609,7 @@ def test_seen_frontier_row_stays_queued_not_dropped(spark, world, tmp_path):
 
     cfg = CrawlConfig(
         max_rounds=40, default_budget=2, max_depth=3, use_cuckoo=True,
-        n_buckets=8, filter_capacity_per_bucket=64,
+        n_buckets=8,
     )
     c = Crawler(
         spark, storage, SyntheticFetcher(world["site_path"], partitions=4), cfg
@@ -602,7 +654,7 @@ def test_staging_fault_keeps_round_n_minus_1(spark, world, tmp_path, table):
     storage = _FailingStage(spark, str(tmp_path / "fault"))
     cfg = CrawlConfig(
         max_rounds=40, default_budget=5, max_attempts=3, max_depth=3,
-        use_cuckoo=True, n_buckets=8, filter_capacity_per_bucket=64,
+        use_cuckoo=True, n_buckets=8,
     )
     fetcher = SyntheticFetcher(world["site_path"], partitions=4)
     Crawler(spark, storage, fetcher, cfg).run(seeds=world["seeds"], max_rounds=1)

@@ -36,7 +36,7 @@ def frontier_like(spark):
 
 
 def test_bloom_partitioned_equals_exact(spark, hashes, frontier_like):
-    bloom = D.build_bloom(hashes, n_buckets=8, expected_per_bucket=128)
+    bloom = D.build_bloom(hashes, n_buckets=8)
     got = sorted(
         r["url"]
         for r in D.seen_anti_join_bloom(
@@ -67,7 +67,8 @@ def test_cuckoo_filter_unit():
 
 
 def test_cuckoo_anti_join_and_delete(spark, hashes, frontier_like):
-    cuckoo = D.build_cuckoo(hashes, n_buckets=8, capacity_per_bucket=256)
+    seen = hashes.withColumn("round", F.lit(0))
+    cuckoo = D.build_cuckoo(hashes, n_buckets=8)
     got = sorted(
         r["url"]
         for r in D.seen_anti_join_cuckoo(
@@ -79,7 +80,7 @@ def test_cuckoo_anti_join_and_delete(spark, hashes, frontier_like):
 
     # re-crawl eviction: delete 100 seen hashes -> they pass the filter again
     evict = hashes.limit(100)
-    pruned = D.cuckoo_delete(cuckoo, evict, n_buckets=8)
+    pruned = D.cuckoo_delete(cuckoo, evict, seen, n_buckets=8)
     live_seen = hashes.join(evict, on="url_hash", how="left_anti")
     got2 = sorted(
         r["url"]
@@ -92,6 +93,34 @@ def test_cuckoo_anti_join_and_delete(spark, hashes, frontier_like):
     )
     assert got2 == want2
     assert len(want2) == 600
+    # the kept keys are all still members
+    new, _ = D._split(D.with_bucket(live_seen, 8), pruned, D._cuckoo_member())
+    assert new.count() == 0
+
+
+def test_cuckoo_delete_skips_unseen_colliding_key(spark):
+    """Evicting a hash that never entered seen must not delete the
+    fingerprint of a seen hash it collides with: the two share bucket
+    (mod 8), first cuckoo bucket and fingerprint."""
+    h = 0x123456789ABCDEF1
+    unseen = h ^ (1 << 40)
+    ref = D.CuckooFilter(1)
+    ref.bulk_insert(np.array([h], dtype=np.int64))
+    assert ref.contains(np.array([unseen], dtype=np.int64)).all()
+
+    seen = spark.createDataFrame([(h, 3)], "url_hash long, round int")
+    filt = D.SeenFilter("cuckoo", n_buckets=8)
+    filt.filters = filt.build(seen, 3)
+
+    def maybes():
+        _, maybe = D._split(D.with_bucket(seen.select("url_hash"), 8), filt.filters,
+                            D._cuckoo_member())
+        return [r["url_hash"] for r in maybe.collect()]
+
+    filt.filters = filt.delete(spark.createDataFrame([(unseen,)], "url_hash long"), seen)
+    assert maybes() == [h], "a seen URL would probe as definitely new"
+    filt.filters = filt.delete(seen.select("url_hash"), seen)
+    assert maybes() == []
 
 
 def test_cuckoo_bulk_insert_membership():
@@ -112,7 +141,7 @@ def test_cuckoo_overflow_routes_to_exact(spark, hashes, frontier_like):
     # hand-built filter table: every bucket overflowed with an EMPTY filter
     # that would otherwise claim nothing is seen (the false-negative trap)
     empty = D.CuckooFilter(capacity=4)
-    rows = [(b, 4, bytearray(empty.to_bytes()), True) for b in range(8)]
+    rows = [(b, 0, 4, bytearray(empty.to_bytes()), True) for b in range(8)]
     cuckoo = spark.createDataFrame(rows, schema=D.CUCKOO_SCHEMA)
     got = sorted(
         r["url"]
@@ -127,14 +156,16 @@ def test_cuckoo_overflow_routes_to_exact(spark, hashes, frontier_like):
 
 
 def test_cuckoo_build_sizes_from_actual_rows(spark):
-    """build_cuckoo must size each filter from the real bucket count, so a
-    lowballed capacity hint cannot silently drop keys (ADVICE r01)."""
+    """build_cuckoo sizes each bucket's filter from its real key count, so
+    no key is dropped however many land in a bucket (ADVICE r01)."""
     seen = spark.range(0, 4000).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")
     )
-    cuckoo = D.build_cuckoo(seen, n_buckets=4, capacity_per_bucket=8)
+    cuckoo = D.build_cuckoo(seen, n_buckets=4)
+    counts = {r["bucket"]: r["count"] for r in D.with_bucket(seen, 4).groupBy("bucket").count().collect()}
     rows = cuckoo.collect()
-    assert all(r["capacity"] >= 900 for r in rows)  # ~1000 rows/bucket
+    assert {r["bucket"]: r["capacity"] for r in rows} == counts
+    assert not any(r["overflowed"] for r in rows)
     frontier = spark.range(0, 8000).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
         F.concat(F.lit("u"), F.col("id")).alias("url"),
@@ -143,31 +174,31 @@ def test_cuckoo_build_sizes_from_actual_rows(spark):
     assert got == 4000
 
 
-def test_merge_blooms_equals_full_build(spark, hashes):
-    """bloom_insert(bloom(A), B) is bit-identical to bloom(A ∪ B) — the
-    property the engine's incremental O(delta)/round filter maintenance
-    rests on."""
+def test_merge_blooms_equals_full_build(spark, hashes, frontier_like):
+    """The union probe of two bloom segments, bloom(A) and bloom(B), equals
+    the probe of one build over A ∪ B: both hold every seen key and both
+    return the exact anti-join.  A key is a maybe of the union exactly
+    when it is a maybe of either segment."""
 
-    def bitmaps(bloom):
-        return {
-            r["bucket"]: (r["n_bits"], r["n_hashes"], bytes(r["bits"]))
-            for r in bloom.collect()
-        }
+    def maybes(filters):
+        fb = D.with_bucket(frontier_like, 8)
+        return {r["url_hash"] for r in D._split(fb, filters, D._bloom_member())[1].collect()}
 
     # split on sign, NOT parity: parity correlates with pmod(hash, 8), which
-    # would make A's and B's buckets disjoint and never exercise the insert
-    # into a stored bitmap
-    a = hashes.filter(F.col("url_hash") > 0)
-    b = hashes.filter(F.col("url_hash") <= 0)
-    full = bitmaps(D.build_bloom(hashes, 8, 64))
-    assert bitmaps(D.bloom_insert(D.build_bloom(a, 8, 64), b, 8, 64)) == full
+    # would make A's and B's buckets disjoint and never put two segments
+    # in one bucket
+    a = D.build_bloom(hashes.filter(F.col("url_hash") > 0), 8, 0)
+    b = D.build_bloom(hashes.filter(F.col("url_hash") <= 0), 8, 1)
+    union = a.unionByName(b)
+    assert union.groupBy("bucket").count().filter("count = 2").count() == 8
+    assert maybes(union) == maybes(a) | maybes(b)
+    seen = {r["url_hash"] for r in hashes.collect()}
+    assert seen <= maybes(union) and seen <= maybes(D.build_bloom(hashes, 8))
 
-    # a stored bucket keeps its own sizing, whatever the capacity passed
-    assert bitmaps(D.bloom_insert(D.build_bloom(a, 8, 64), b, 8, 4096)) == full
-
-    # fresh buckets (no stored bitmap yet) are sized from the capacity
-    empty = D.build_bloom(hashes.limit(0), 8)
-    assert bitmaps(D.bloom_insert(empty, hashes, 8, 64)) == full
+    want = sorted(r["url"] for r in D.seen_anti_join(frontier_like, hashes).collect())
+    for filters in (union, D.build_bloom(hashes, 8)):
+        got = D.seen_anti_join_bloom(frontier_like, hashes, filters, n_buckets=8)
+        assert sorted(r["url"] for r in got.collect()) == want
 
 
 def test_media_sink_streams_to_files(spark, tmp_path):
@@ -236,20 +267,22 @@ def _crawl(spark, world, tmp, cfg, robots=None, host_budget=None):
     return storage, stats
 
 
-def test_cuckoo_insert_incremental_and_overflow(spark, hashes, frontier_like):
-    """Incremental maintenance: build over half the seen set, bulk-insert
-    the other half cogrouped — the probe must equal the exact anti-join
-    over the full set.  Forcing inserts past the fixed table's design load
-    flags the bucket `overflowed`, which routes its probes to the exact
-    confirm — still row-identical, never a false negative."""
+def test_cuckoo_segments_incremental(spark, hashes, frontier_like):
+    """Incremental maintenance: one segment over half the seen set, one
+    over the other half, each sized from its own keys — the union probe
+    equals the exact anti-join over the full set, and no segment
+    overflows."""
     first = hashes.limit(250)
     rest = hashes.join(first, on="url_hash", how="left_anti")
-    base = D.build_cuckoo(first, n_buckets=8, capacity_per_bucket=4)
-    merged = D.cuckoo_insert(base, rest, n_buckets=8, capacity_per_bucket=4)
+    segments = D.build_cuckoo(first, 8, 0).unionByName(D.build_cuckoo(rest, 8, 1))
+    rows = segments.collect()
+    assert sorted({r["round"] for r in rows}) == [0, 1]
+    assert sum(r["capacity"] for r in rows) == 500
+    assert not any(r["overflowed"] for r in rows)
     got = sorted(
         r["url"]
         for r in D.seen_anti_join_cuckoo(
-            frontier_like, hashes, merged, n_buckets=8
+            frontier_like, hashes, segments, n_buckets=8
         ).collect()
     )
     want = sorted(
@@ -257,21 +290,6 @@ def test_cuckoo_insert_incremental_and_overflow(spark, hashes, frontier_like):
     )
     assert got == want
     assert len(want) == 500
-    # tiny capacity + doubled load -> at least one bucket had to overflow
-    assert any(r["overflowed"] for r in merged.collect())
-
-    # inserts into buckets with NO existing filter row create fresh filters
-    fresh = D.cuckoo_insert(
-        D.build_cuckoo(hashes.limit(0), n_buckets=8), hashes,
-        n_buckets=8, capacity_per_bucket=128,
-    )
-    got2 = sorted(
-        r["url"]
-        for r in D.seen_anti_join_cuckoo(
-            frontier_like, hashes, fresh, n_buckets=8
-        ).collect()
-    )
-    assert got2 == want
 
 
 def test_robots_gate_blocks_paths(spark, world, tmp_path):

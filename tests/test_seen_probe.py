@@ -27,14 +27,19 @@ def probe_hashes():
 
 
 def _maybe_by_bucket(spark, hashes, filters, member, buckets):
-    """``_maybe`` for every (bucket, hash) pair, keyed like the reference."""
+    """Is every (bucket, hash) pair a maybe, keyed like the reference."""
     keys = pd.DataFrame(
         {"bucket": np.repeat(np.array(buckets, dtype=np.int32), len(hashes)),
          "url_hash": np.tile(hashes, len(buckets))}
     )
     fb = spark.createDataFrame(keys, "bucket int, url_hash long")
-    rows = D._mark_maybe(fb, filters, member).collect()
-    return {(r["bucket"], r["url_hash"]): r["_maybe"] for r in rows}
+    new, maybe = D._split(fb, filters, member)
+    got = {(r["bucket"], r["url_hash"]): True for r in maybe.collect()}
+    for r in new.collect():
+        assert (r["bucket"], r["url_hash"]) not in got
+        got[(r["bucket"], r["url_hash"])] = False
+    assert len(got) == len(keys)
+    return got
 
 
 def test_cuckoo_member_bit_exact(spark, probe_hashes):
@@ -43,40 +48,59 @@ def test_cuckoo_member_bit_exact(spark, probe_hashes):
     assert full.bulk_insert(h[::2])
     small = D.CuckooFilter(capacity=40)  # another m, tiny and crowded
     small.bulk_insert(h[1:60:3])
+    other = D.CuckooFilter(capacity=300)  # a third m
+    other.bulk_insert(h[1::10])
     rows = [
-        (0, len(h), bytearray(full.to_bytes()), False),
-        (1, 40, bytearray(small.to_bytes()), False),
-        (2, 40, bytearray(small.to_bytes()), True),  # overflowed: all maybe
+        (0, 0, len(h), bytearray(full.to_bytes()), False),
+        # bucket 1: three segments, a union of three table sizes
+        (1, 0, 40, bytearray(small.to_bytes()), False),
+        (1, 1, 300, bytearray(other.to_bytes()), False),
+        (1, 2, len(h), bytearray(full.to_bytes()), False),
+        # bucket 2: only one of its two segments overflowed: all maybe
+        (2, 0, 300, bytearray(other.to_bytes()), False),
+        (2, 1, 40, bytearray(small.to_bytes()), True),
         # bucket 3 has no filter row: nothing seen there
     ]
     filters = spark.createDataFrame(rows, schema=D.CUCKOO_SCHEMA)
     got = _maybe_by_bucket(spark, h, filters, D._cuckoo_member(), [0, 1, 2, 3])
-    want = {0: full.contains(h), 1: small.contains(h),
+    want = {0: full.contains(h),
+            1: small.contains(h) | other.contains(h) | full.contains(h),
             2: np.ones(len(h), bool), 3: np.zeros(len(h), bool)}
     for b, ref in want.items():
         assert [got[(b, int(x))] for x in h] == ref.tolist(), f"bucket {b}"
     assert want[0].sum() >= len(h) // 2 and not want[0].all()
+    assert want[1].sum() > want[0].sum() and not want[1].all()
 
 
 def test_bloom_member_bit_exact(spark, probe_hashes):
     h = probe_hashes
+    # (bucket, round) -> (n_bits, n_hashes), keys; bucket 1 holds three
+    # segments over disjoint keys
     sizing = {
-        0: D.bloom_params(64),  # the crowded default-fpp sizing
-        1: D.bloom_params(10_000),
-        2: (128, 16),  # the most hashes a row can hold
-        3: (64, 1),
+        (0, 0): (D.bloom_params(64), 640),  # the crowded default-fpp sizing
+        (1, 0): (D.bloom_params(10_000), 640),
+        (1, 1): ((128, 16), 8),  # the most hashes a row can hold
+        (1, 2): (D.bloom_params(200, 0.01 / 64), 200),
+        (2, 0): ((64, 1), 20),
     }
-    frames = [D._bloom_row(b, h[b::3], n_bits, k) for b, (n_bits, k) in sizing.items()]
-    filters = spark.createDataFrame(pd.concat(frames), schema=D.BLOOM_SCHEMA)
+    frames = [
+        D._bloom_row(b, h[b + rnd :: 5][:n], n_bits, k).assign(round=rnd)
+        for (b, rnd), ((n_bits, k), n) in sizing.items()
+    ]
+    cols = ["bucket", "round", "n_bits", "n_hashes", "bits"]
+    filters = spark.createDataFrame(pd.concat(frames)[cols], schema=D.BLOOM_SCHEMA)
     got = _maybe_by_bucket(spark, h, filters, D._bloom_member(), [0, 1, 2, 3, 4])
+    want = {b: np.zeros(len(h), bool) for b in range(5)}
     for f in frames:
         b, n_bits, k = (int(f[c].iloc[0]) for c in ("bucket", "n_bits", "n_hashes"))
         bits = np.frombuffer(f["bits"].iloc[0], np.uint8)
         pos = D._positions(h, n_bits, k)
-        ref = ((bits[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0).all(axis=0)
+        want[b] |= ((bits[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0).all(axis=0)
+    for b, ref in want.items():
         assert [got[(b, int(x))] for x in h] == ref.tolist(), f"bucket {b}"
     # bucket 4 has no filter row: nothing seen there
-    assert not any(got[(4, int(x))] for x in h)
+    assert not want[4].any()
+    assert 640 + 8 + 200 <= want[1].sum() < len(h)
 
 
 PYTHON_EXECS = ("FlatMapCoGroupsInPandas", "FlatMapGroupsInPandas", "MapInPandas",
@@ -86,19 +110,55 @@ PYTHON_EXECS = ("FlatMapCoGroupsInPandas", "FlatMapGroupsInPandas", "MapInPandas
 @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
 def test_probe_plan_has_no_python_stage(spark, tmp_path, kind):
     """The probe's executed plan is JVM-only, and its rows equal the exact
-    anti-join.  The filter table is read back from parquet, as the engine
-    reads the committed one."""
+    anti-join.  The filter table holds three segments, each written to its
+    own parquet dir and read back, as the engine reads the committed
+    one."""
     seen = spark.range(0, 400).select(F.xxhash64(F.col("id").cast("string")).alias("url_hash"))
     frontier = spark.range(200, 700).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
         F.concat(F.lit("u"), F.col("id")).alias("url"),
     )
-    filt = D.SeenFilter(kind, n_buckets=8, capacity_per_bucket=64)
-    filt.build(seen).write.parquet(str(tmp_path / kind))
-    filt.filters = spark.read.parquet(str(tmp_path / kind))
+    filt = D.SeenFilter(kind, n_buckets=8)
+    dirs = []
+    for rnd in range(3):
+        dirs.append(str(tmp_path / f"{kind}-{rnd}"))
+        part = seen.filter(F.pmod(F.col("url_hash"), F.lit(3)) == rnd)
+        filt.build(part, rnd).write.parquet(dirs[-1])
+    filt.filters = spark.read.parquet(*dirs)
+    assert filt.filters.groupBy("bucket").count().filter("count = 3").count() == 8
     out = filt.probe(frontier, seen)
     got = sorted(r["url"] for r in out.collect())
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert not [p for p in PYTHON_EXECS if p in plan], plan
+    assert "LeftAnti" in plan and "LeftSemi" in plan, plan
     assert got == sorted(r["url"] for r in D.seen_anti_join(frontier, seen).collect())
     assert len(got) == 300
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_segment_bytes_follow_the_delta(spark, kind):
+    """Over six rounds the seen set grows 6x while each round's delta stays
+    the same size: every round's new segment is bounded by c*|delta| raw
+    bytes and does not grow with |seen|.  The union of the segments still
+    holds every seen key."""
+    filt = D.SeenFilter(kind, n_buckets=8, compact_every=64)
+    delta_n, sizes, segments = 400, [], []
+    for rnd in range(6):
+        delta = spark.range(rnd * delta_n, (rnd + 1) * delta_n).select(
+            F.xxhash64(F.col("id").cast("string")).alias("url_hash")
+        )
+        seg = filt.build(delta, rnd).collect()
+        assert {r["round"] for r in seg} == {rnd}
+        sizes.append(sum(len(r["bits" if kind == "bloom" else "table"]) for r in seg))
+        segments += seg
+    assert all(s <= 8 * delta_n for s in sizes), sizes
+    assert max(sizes) <= 2 * min(sizes), sizes
+    filt.filters = spark.createDataFrame(
+        segments, schema=D.BLOOM_SCHEMA if kind == "bloom" else D.CUCKOO_SCHEMA
+    )
+    seen = spark.range(0, 6 * delta_n).select(
+        F.xxhash64(F.col("id").cast("string")).alias("url_hash")
+    )
+    new, maybe = D._split(D.with_bucket(seen, 8), filt.filters,
+                          D._bloom_member() if kind == "bloom" else D._cuckoo_member())
+    assert new.count() == 0 and maybe.count() == 6 * delta_n
