@@ -96,11 +96,14 @@ class CrawlStats:
 
 
 def ok_cond():
-    return (
+    # two-valued, so every parsed row is in exactly one of ok / failed: a
+    # null status (and the null code/success it parses to) is a failure
+    return F.coalesce(
         (F.col("status") == 200)
         & (F.col("code") == 0)
         & F.col("success")
-        & F.col("parse_error").isNull()
+        & F.col("parse_error").isNull(),
+        F.lit(False),
     )
 
 
@@ -295,19 +298,23 @@ class Crawler:
         parsed = P.parse_stage(self.fetcher.fetch(scheduled))
         scratch = self._scratch_dir(round_no)
         obs = Observation()
+        last_attempt = F.col("attempt") + 1 >= cfg.max_attempts
         parsed.observe(
             obs,
             F.count(F.lit(1)).alias("sched"),
             F.sum(ok_cond().cast("int")).alias("ok"),
             F.sum((~ok_cond()).cast("int")).alias("failed"),
-            F.sum(
-                (~ok_cond() & (F.col("attempt") + 1 >= cfg.max_attempts)).cast("int")
-            ).alias("dead"),
+            F.sum((~ok_cond() & last_attempt).cast("int")).alias("dead"),
             F.sum(
                 (ok_cond() & F.col("media_ref").isNotNull()).cast("int")
             ).alias("media"),
         ).write.mode("overwrite").parquet(scratch)
         counts = obs.get
+        if not counts["sched"]:
+            # nothing was scheduled (the last round of a finished crawl):
+            # every table would commit the rows it already holds, so the
+            # round stages, builds and commits nothing
+            return RoundStats(round_no, 0, 0, 0, 0, self._docs_total())
         parsed = self.spark.read.parquet(scratch)
 
         ok = parsed.filter(ok_cond())
@@ -344,19 +351,17 @@ class Crawler:
         # 7. successors + retries -> next frontier
         succ = FR.successors(ok, round_no + 1, cfg.max_depth)
         retries = FR.normalize_frontier(
-            failed.filter(F.col("attempt") + 1 < cfg.max_attempts).withColumn(
-                "attempt", F.col("attempt") + 1
-            )
+            failed.filter(~last_attempt).withColumn("attempt", F.col("attempt") + 1)
         )
-        dead = failed.filter(F.col("attempt") + 1 >= cfg.max_attempts)
 
         # 8. seen += successfully fetched + dead-lettered (retries stay
-        # unseen).  These rows survived the anti-join, so they are disjoint
-        # from `seen` and unique (frontier is url_hash-unique): the commit is
-        # a pure APPEND of O(fetched-this-round) rows — never a rewrite of
-        # the full seen set (VERDICT r01 item 3).
+        # unseen): ONE filter over the spill, so the seen job and every
+        # consumer of the delta scan it once.  These rows survived the
+        # anti-join, so they are disjoint from `seen` and unique (frontier
+        # is url_hash-unique): the commit is a pure APPEND of
+        # O(fetched-this-round) rows, never a rewrite of the full seen set.
         seen_delta = D.with_bucket(
-            ok.select("url_hash").unionByName(dead.select("url_hash")),
+            parsed.filter(ok_cond() | last_attempt).select("url_hash"),
             cfg.n_buckets,
         ).withColumn("round", F.lit(round_no))
         stage_jobs.append(lambda: storage.stage_append("seen", seen_delta))
@@ -378,7 +383,7 @@ class Crawler:
             "attempt",
             "latency_ms",
             "partition_id",
-            (~ok_cond() & (F.col("attempt") + 1 >= cfg.max_attempts)).alias("dead_letter"),
+            (~ok_cond() & last_attempt).alias("dead_letter"),
             "media_ref",
             "n_chunks",
             "bytes_fetched",
@@ -386,36 +391,26 @@ class Crawler:
         )
         stage_jobs.append(lambda: storage.stage_append("fetch_log", log_rows))
 
-        # 10. next frontier: unscheduled candidate remainder ∪ retries ∪
-        # genuinely-new successors, one row per url_hash.  Only the
-        # SUCCESSORS leg can contain already-seen hashes — the committed
-        # frontier is disjoint from the effective seen set by invariant
-        # (it is written from this very expression, whose every leg is
-        # seen-filtered; evict() only re-enqueues tombstoned hashes), and a
-        # retry hash never entered seen (only ok/dead do).  So the seen
-        # anti-join family runs over O(successors) rows instead of the full
-        # frontier union, and the old whole-union ∖ seen_delta shuffle is
-        # gone (the r03 plan paid 4 sequential full-frontier shuffles here;
-        # this one pays 1 plus two branch-local ones).  The scheduled set
-        # is read back from the scratch snapshot (fetch is 1:1, so parsed
-        # carries exactly the scheduled url_hashes) — re-deriving it from
-        # `scheduled` would re-run the whole politeness shuffle chain a
-        # second time (measured 5.5 s of the 16 s round at 250k rows).
-        # Remainder base is the RAW frontier snapshot, not `candidates`:
-        # reusing the candidates plan re-executes the seen anti-join chain a
-        # second time inside the frontier staging job.  The committed
-        # invariant (frontier ∩ effective seen = ∅ — every next_frontier leg
-        # below is seen-filtered) makes candidates == frontier row-for-row
-        # for committed rounds, and the reference-semantics simulator
-        # (simulator.py:186) ALREADY specifies the remainder as frontier ∖
-        # scheduled, so this is the spec-exact form.  Cost: with the exact
-        # anti-join config the dropped leg is a broadcast join (measured
-        # equal within noise at 250k rows); with bloom/cuckoo it re-ran the
-        # full-frontier cogrouped probe (shuffle + Arrow + Python) per round
-        # — measured ~9% off the cuckoo commit round, and the probe chain
-        # grows with |seen| at 10^10 scale.  A hand-injected frontier row
-        # that is already seen stays queued (never scheduled — scheduling
-        # still anti-joins) instead of being silently dropped, matching the
+        # 10. next frontier: unscheduled remainder ∪ retries ∪
+        # genuinely-new successors, one row per url_hash.  Each leg reads
+        # the spill once: the remainder its url_hashes, the retries the
+        # failed filter, the successors one posexplode of the ok rows and
+        # the seen delta its one filter.  A filter round's probe copies the
+        # successor leg into its definitely-new and confirmed branches,
+        # which reuse the seen delta's exchange: 5 spill scans (4 in an
+        # exact round).
+        # Only the SUCCESSORS leg can contain already-seen hashes: the
+        # committed frontier is disjoint from the effective seen set by
+        # invariant (it is written from this very expression, whose every
+        # leg is seen-filtered; evict() only re-enqueues tombstoned
+        # hashes), and a retry hash never entered seen (only ok/dead do).
+        # The remainder is the RAW frontier snapshot minus the spill's
+        # url_hashes (fetch is 1:1, so parsed carries exactly the scheduled
+        # hashes) — the simulator's frontier ∖ scheduled.  Neither
+        # `scheduled` (it re-runs the politeness shuffle chain) nor
+        # `candidates` (it re-runs the seen probe) is read again.  A
+        # hand-injected frontier row that is already seen stays queued
+        # (never scheduled — scheduling still anti-joins), matching the
         # simulator.
         remainder = frontier.join(
             parsed.select("url_hash"), on="url_hash", how="left_anti"
@@ -513,18 +508,18 @@ class Crawler:
                     if t is not None and storage.latest_snapshot(t) is not None:
                         storage.expire_snapshots(t, keep_last=cfg.expire_keep_last)
 
-        # docs total only matters for the A2 cap check — avoid the extra job
-        # otherwise (each driver-side action is a full Spark job per round)
-        n_docs = (
-            storage.read("documents").count()
-            if cfg.total_doc_cap is not None
-            else -1
-        )
         return RoundStats(
             round_no=round_no,
             scheduled=int(counts["sched"]),
             ok=int(counts["ok"] or 0),
             failed=int(counts["failed"] or 0),
             dead_lettered=int(counts["dead"] or 0),
-            new_docs_total=n_docs,
+            new_docs_total=self._docs_total(),
         )
+
+    def _docs_total(self) -> int:
+        # docs total only matters for the A2 cap check — avoid the extra job
+        # otherwise (each driver-side action is a full Spark job per round)
+        if self.config.total_doc_cap is None:
+            return -1
+        return self.storage.read("documents").count()

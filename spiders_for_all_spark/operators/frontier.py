@@ -135,67 +135,66 @@ def normalize_frontier(df: DataFrame) -> DataFrame:
 
 
 def successors(parsed_ok: DataFrame, round_no: int, max_depth: int) -> DataFrame:
-    """All next-round frontier rows implied by this round's successful fetches."""
-    base = parsed_ok
-    page_succ = (
-        base.filter(
-            (F.col("kind") == "page")
-            & (F.col("items_count") > 0)
-            & (F.col("items_count") == F.col("page_size"))
-        )
+    """All next-round frontier rows implied by this round's successful fetches.
+
+    One pass over ``parsed_ok``: each row posexplodes the string array
+    ``[page-next, cursor-next, *out_links]`` and an element's position says
+    which successor it is.  Slot 0 is the next page of a full page and slot
+    1 the next cursor of a ``has_more`` response; both keep the parent's
+    depth, and an empty one is null and dropped.  Slots 2.. are the
+    out-links of rows below ``max_depth`` (depth + 1); a null link still
+    gives a row, as ``explode`` does.  The array is plain Columns, no
+    lambda, so the Generate stays in its whole-stage codegen stage.
+    """
+    kind, url, depth = F.col("kind"), F.col("url"), F.col("depth")
+    full_page = (
+        (kind == "page")
+        & (F.col("items_count") > 0)
+        & (F.col("items_count") == F.col("page_size"))
+    )
+    more = (
+        (kind == "cursor")
+        & F.col("has_more")
+        & F.col("next_cursor").isNotNull()
+        & (F.col("next_cursor") != "")
+    )
+    # the parent's page number is extracted once, below the Generate, and
+    # read by both the next-page URL and the successor's page_no
+    page_no = F.col("_page_no")
+    slots = F.concat(
+        F.array(
+            F.when(full_page, next_page_url(url, page_no)),
+            F.when(more, next_cursor_url(url, F.col("next_cursor"))),
+        ),
+        F.coalesce(
+            F.when(depth < max_depth, F.col("out_links")),
+            F.array().cast("array<string>"),
+        ),
+    )
+    pos, succ_url = F.col("pos"), F.col("url")
+    succ = (
+        parsed_ok.withColumn("_page_no", F.when(full_page, url_page_no(url)))
         .select(
-            next_page_url(F.col("url"), url_page_no(F.col("url"))).alias("url"),
+            "priority", "depth", "next_cursor", "_page_no",
+            F.posexplode(slots).alias("pos", "url"),
+        )
+        .filter((pos > 1) | succ_url.isNotNull())
+        .select(
+            succ_url,
             F.col("priority"),
             F.lit(round_no).alias("discovery_round"),
-            F.col("depth").alias("depth"),  # same chain, not deeper
+            F.when(pos > 1, depth + 1).otherwise(depth).alias("depth"),
             F.lit(0).alias("attempt"),
-            F.lit(None).cast("string").alias("cursor"),
-            (url_page_no(F.col("url")) + 1).alias("page_no"),
-            F.lit("page").alias("kind"),
+            F.when(pos == 1, F.col("next_cursor")).alias("cursor"),
+            F.when(pos == 0, page_no + 1).alias("page_no"),
+            F.when(pos == 0, "page")
+            .when(pos == 1, "cursor")
+            .otherwise(kind_of_url(succ_url))
+            .alias("kind"),
             F.lit(None).cast("array<string>").alias("backup_urls"),
         )
     )
-    cursor_succ = (
-        base.filter(
-            (F.col("kind") == "cursor")
-            & F.col("has_more")
-            & F.col("next_cursor").isNotNull()
-            & (F.col("next_cursor") != "")
-        )
-        .select(
-            next_cursor_url(F.col("url"), F.col("next_cursor")).alias("url"),
-            F.col("priority"),
-            F.lit(round_no).alias("discovery_round"),
-            F.col("depth").alias("depth"),
-            F.lit(0).alias("attempt"),
-            F.col("next_cursor").alias("cursor"),
-            F.lit(None).cast("int").alias("page_no"),
-            F.lit("cursor").alias("kind"),
-            F.lit(None).cast("array<string>").alias("backup_urls"),
-        )
-    )
-    links = (
-        base.filter(F.col("depth") < max_depth)
-        .select(
-            F.col("priority"),
-            F.col("depth"),
-            F.explode("out_links").alias("url"),
-        )
-        .select(
-            F.col("url"),
-            F.col("priority"),
-            F.lit(round_no).alias("discovery_round"),
-            (F.col("depth") + 1).alias("depth"),
-            F.lit(0).alias("attempt"),
-            F.lit(None).cast("string").alias("cursor"),
-            F.lit(None).cast("int").alias("page_no"),
-            kind_of_url(F.col("url")).alias("kind"),
-            F.lit(None).cast("array<string>").alias("backup_urls"),
-        )
-    )
-    return normalize_frontier(
-        with_url_columns(page_succ.unionByName(cursor_succ).unionByName(links))
-    )
+    return normalize_frontier(with_url_columns(succ))
 
 
 def dedup_frontier(frontier: DataFrame) -> DataFrame:

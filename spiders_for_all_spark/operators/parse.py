@@ -398,7 +398,9 @@ def _build_parse_exprs(
     """The full parse expression tree: (withColumns projection, output
     columns).  Depends only on whether the input carries media columns."""
     kind = F.col("kind")
-    is_http_ok = F.col("status") == 200
+    # two-valued: a fetch without a status (connection error, timeout, media
+    # with every candidate failed) is not OK, like parse_body's status != 200
+    is_http_ok = F.col("status").eqNullSafe(200)
 
     # Materialize the expensive extractions ONCE in a separate projection:
     # from_json would otherwise be re-evaluated in every downstream column

@@ -290,7 +290,8 @@ def test_cuckoo_incremental_no_full_rebuild(spark, world, tmp_path, monkeypatch,
     later build is that round's segment, built from its seen delta alone,
     so its input count is the round's ok + dead-lettered count.  The
     counted calls also prove the engine calls build_bloom / build_cuckoo
-    through the dedup module at call time."""
+    through the dedup module at call time.  The crawl's last round
+    schedules nothing: it builds no segment and commits nothing."""
     from spiders_for_all_spark import engine as ENG
 
     calls: list[tuple[int, int, bool]] = []
@@ -301,15 +302,35 @@ def test_cuckoo_incremental_no_full_rebuild(spark, world, tmp_path, monkeypatch,
         calls.append((round_no, keys.count(), reads_seen))
         return orig(keys, n_buckets, round_no, *a, **k)
 
+    catalogs: list[tuple[dict, dict]] = []
+    run_round = ENG.Crawler.run_round
+
+    def recording(crawler, round_no):
+        st = crawler.storage
+
+        def catalog():
+            return {t: st.latest_snapshot(t) for t in st.tables()}
+
+        before = catalog()
+        rs = run_round(crawler, round_no)
+        catalogs.append((before, catalog()))
+        return rs
+
     monkeypatch.setattr(ENG.D, f"build_{table}", counting)
+    monkeypatch.setattr(ENG.Crawler, "run_round", recording)
     storage, stats = run_engine(
         spark, world, tmp_path / f"{table}_inc", budget=2, **MODES[table]
     )
     assert len(stats.rounds) >= 3, "need a multi-round crawl to prove it"
     assert [c for c in calls if c[2]] == [calls[0]] == [(-1, 0, True)]
-    by_round = {rs.round_no: rs.ok + rs.dead_lettered for rs in stats.rounds}
+    by_round = {rs.round_no: rs.ok + rs.dead_lettered for rs in stats.rounds
+                if rs.scheduled}
     assert [(r, n) for r, n, _ in calls[1:]] == sorted(by_round.items())
+    assert all(n > 0 for _, n, _ in calls[1:]), calls
     assert storage.latest_snapshot(table) is not None
+    assert stats.rounds[-1].scheduled == 0
+    before, after = catalogs[-1]
+    assert after == before
 
 
 @pytest.mark.parametrize("table", ["bloom", "cuckoo"])
@@ -507,27 +528,53 @@ def test_evict_recrawls_url(spark, world, tmp_path, mode):
         assert after[d][0] == before[d][0], f"create_at changed for {d}"
 
 
+def _spill_scans(df) -> int:
+    """File scans of a round's scratch spill in ``df``'s executed plan (a
+    reused exchange is not a scan).  Read from the scan nodes' root paths:
+    the plan string abbreviates long locations."""
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    n = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+            paths = leaf.relation().location().rootPaths().toString()
+            n += "/_scratch/round-" in paths
+    return n
+
+
 class _MediaMetaPlans(SnapshotStorage):
     """Storage that records the executed plan of every DataFrame staged
-    into ``media_meta``."""
+    into ``media_meta``, and how many times the frontier and seen staging
+    plans scan the round's spill."""
 
     def __init__(self, *args, **kwargs):
         super().__init__(*args, **kwargs)
         self.media_meta_plans: list[str] = []
+        self.spill_scans: dict[str, list[int]] = {"frontier": [], "seen": []}
 
     def stage_append(self, table, df, *args, **kwargs):
         if table == "media_meta":
             self.media_meta_plans.append(
                 df._jdf.queryExecution().executedPlan().toString()
             )
+        if table == "seen":
+            self.spill_scans[table].append(_spill_scans(df))
         return super().stage_append(table, df, *args, **kwargs)
+
+    def stage_overwrite(self, table, df, *args, **kwargs):
+        if table == "frontier":
+            self.spill_scans[table].append(_spill_scans(df))
+        return super().stage_overwrite(table, df, *args, **kwargs)
 
 
 def test_media_meta_table_and_sink(spark, world, tmp_path):
     """The engine defaults media to the warehouse file sink (bytes never in
     a plan column) and commits a typed media_meta row per fetched payload
     in the same atomic flip.  The fetch worker sniffs each payload as it
-    writes it, so the media_meta staging job runs no Python."""
+    writes it, so the media_meta staging job runs no Python.  Each leg of
+    the next frontier reads the spill once (a filter crawl's probe copies
+    the successor leg, which makes 5), and the seen delta is one filter
+    over it."""
     import os
 
     from test_seen_probe import PYTHON_EXECS
@@ -540,6 +587,10 @@ def test_media_meta_table_and_sink(spark, world, tmp_path):
     assert storage.media_meta_plans
     for plan in storage.media_meta_plans:
         assert not [p for p in PYTHON_EXECS if p in plan], plan
+    # the bootstrap commits read no spill; every round's plans do
+    scans = {t: [n for n in ns if n] for t, ns in storage.spill_scans.items()}
+    assert scans["frontier"] and max(scans["frontier"]) <= 5, scans
+    assert scans["seen"] and set(scans["seen"]) == {1}, scans
     meta = {r["media_ref"]: r for r in storage.read("media_meta").collect()}
     assert world["media_backup"] in meta
     r = meta[world["media_backup"]]
